@@ -59,8 +59,9 @@ HOPE_BROADCAST_MAX_VALUES = 25_000_000
 # job-floor-bound at small scale (each superstep a near-empty single-stage
 # job), so two collects + numpy segmented sums replace ~40 Spark jobs.
 # Same guarded-driver-kernel envelope as operators/kernel.py
-# KERNEL_DRIVER_LOOP_MAX_EDGES; the distributed path is untouched above
-# the caps.
+# KERNEL_DRIVER_LOOP_MAX_EDGES, counted the same way: edge rows the driver
+# holds after symmetrization (``supersteps.driver_edge_rows``); the
+# distributed path is untouched above the caps.
 HOPE_DRIVER_MAX_EDGES = 5_000_000
 
 
@@ -171,8 +172,8 @@ def _hope_driver(
     the numpy mix31 twin (hash arithmetic exact; the Box–Muller log/cos
     may differ from the JVM's by an ulp — orders of magnitude inside the
     1e-8 numpy-twin tolerance, and hope_katz has no driver oracle row).
-    The mat-vec supersteps become deterministic segmented sums
-    (``np.add.reduceat`` over edge lists sorted by the group endpoint),
+    The mat-vec supersteps become deterministic weighted ``np.bincount``
+    sums over the edge list sorted by the group endpoint (one per column),
     and every dense step (Gram, Cholesky, eigh, column combos) is the
     exact driver arithmetic the distributed path already runs on its
     aggregated r x r matrices. Float sums reorder vs the distributed
@@ -333,9 +334,11 @@ def hope_katz_train(
     # ``driver_max_edges`` override (0 disables) exists for tests and for
     # callers that want the distributed plan regardless.
     cap = HOPE_DRIVER_MAX_EDGES if driver_max_edges is None else driver_max_edges
+    from metagraph_spark.operators.supersteps import driver_edge_rows
+
     if (
         cap
-        and graph.num_edges() <= cap
+        and driver_edge_rows(graph, "sym") <= cap
         and graph.num_nodes() * r <= HOPE_BROADCAST_MAX_VALUES
     ):
         return _hope_driver(

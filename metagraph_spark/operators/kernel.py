@@ -1,36 +1,44 @@
-"""CSR/Arrow superstep kernel — the vectorized physical strategy.
+"""CSR block layout for the kernel routes, plus the PageRank kernel.
 
-North-star physical design ("partition edges into per-partition CSR blocks
-held in Arrow; vectorized pandas/Arrow UDFs do the gather-scatter"):
+The kernels (PageRank here; katz, CC, LPA, eigenvector and HITS in
+``operators/kernel_algos.py``) are programs on the one superstep engine in
+``operators/supersteps.py``, which runs them on three executors — driver,
+broadcast and slice store — and routes each call with one rule
+(``supersteps.choose_executor``): below ``KERNEL_DRIVER_LOOP_MAX_EDGES``
+symmetrized edge rows (and ``KERNEL_DRIVER_LOOP_MAX_VERTICES`` vertices)
+the driver executor runs every superstep on the driver over one Arrow
+collect; above it file-backed layouts with at least
+``KERNEL_DISTRIBUTED_MIN_VERTICES`` vertices take the slice store and all
+other layouts the broadcast executor.
+
+This module owns what the executors read:
 
 - ``build_edge_blocks``: one-time layout. Node ids → dense positions
   (sorted-id order); edges → P blocks CONTIGUOUS IN dst (range-partitioned
-  by destination), each block ONE DataFrame row carrying ``srcs``/``dsts``
-  positional int arrays (Arrow list columns — compact, zero per-edge row
-  overhead). Blocks are cached; the plan over them is constant, so no
-  lineage growth and no per-superstep checkpointing is needed.
-- per superstep: broadcast the dense rank vector (numpy, V doubles), run
-  ``mapInPandas`` over the cached blocks — each task computes its dst-range
-  slice of the gather via ``np.bincount(dsts_local, weights=contrib[srcs])``
-  (streaming C loop, cache-friendly, no hash tables) — and the driver
-  assembles slices and applies the rank update in numpy. ONE Spark job,
-  ZERO shuffles per superstep.
+  by destination), each dst-sorted so segmented gathers need no per-round
+  sort. In memory each block is ONE DataFrame row of ``srcs``/``dsts``
+  positional arrays; with ``spill_dir`` each block is a mmap-able ``.npy``
+  pair and the id/degree vectors are files written slice-wise by tasks
+  (driver state O(num_blocks)). Every dst range has a block (empty ones
+  included), so a file-backed layout always has full coverage.
+- ``LocalSliceStore``: the shared-filesystem slice store of the slice-store
+  executor (the protocol is documented in ``operators/slice_stores.py``).
 
-Applicability: the vertex vector must fit on the driver/executors
-(8 bytes × V — fine to ~10^8 vertices; ``pagerank(strategy="auto")`` in
-operators/pagerank.py picks this kernel below ``KERNEL_MAX_VERTICES`` and
-the join-based path above it). This mirrors the reference's
-physical split: scipy CSR kernels for in-memory speed
-(``plugins/scipy/types.py:191-225``), chunked loaders for bigger-than-memory
-(``core/dask/loader.py:15-74``).
-
-Semantics are EXACTLY operators/pagerank.py (networkx dangling handling,
-N-scaled L1 convergence, ConvergenceError) — asserted by shared golden
-tests.
+``pagerank_kernel`` semantics are EXACTLY operators/pagerank.py (networkx
+dangling handling, N-scaled L1 convergence, ConvergenceError) — asserted by
+shared golden tests. Applicability: the reference's physical split —
+scipy CSR kernels for in-memory speed (``plugins/scipy/types.py:191-225``),
+chunked loaders for bigger-than-memory (``core/dask/loader.py:15-74``).
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+import shutil
+import uuid
 from collections.abc import Iterator
 
 import numpy as np
@@ -38,7 +46,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from metagraph_spark.exceptions import ConvergenceError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
 
 BLOCK_SCHEMA = "block int, dst_lo long, srcs array<int>, dsts array<int>"
@@ -46,131 +53,100 @@ BLOCK_SCHEMA_W = BLOCK_SCHEMA + ", ws array<double>"
 
 # Block arrays are raw .npy files opened with mmap in every task: the OS
 # page cache holds ONE copy of each block for the whole host, shared by all
-# python workers — per-worker in-memory caches (round-1 design) multiply
-# resident block data by the worker count and thrash once blocks exceed
-# memory/worker. Reference ancestry: metagraph's shared-memory chunk
+# python workers. Reference ancestry: metagraph's shared-memory chunk
 # registry (core/dask/loader.py:153-240) — same idea, page cache instead of
-# a scheduler plugin. Legacy .npz dirs (pre-round-2 layout) are still
-# readable via the decompress-and-cache fallback below.
-_BLOCK_CACHE: dict = {}
-# per-worker cache of the static inv-degree vector, keyed by run_dir
+# a scheduler plugin.
+# per-worker cache of slice-store aux vectors, keyed by run_dir
 _VEC_CACHE: dict = {}
 
-# File-backed layouts below this vertex count run the broadcast/collect
-# superstep loop even though the slice-store loop is available: the
-# distributed loop's per-superstep fixed cost (slice-file create/write/
-# fsync + manifest job scheduling + distributed result assembly) measured
-# ~25 ms/superstep MORE than broadcast at 280k edges (bench
-# transcript_pagerank_kernel_1e6: 4.1 s distributed vs ~3.0 s broadcast,
-# ~40 supersteps), while the driver-resident vectors it avoids are only
-# n*8 B — 16 MB at this cap, harmless on any driver. Above the cap the
-# O(V)-per-superstep driver collect + broadcast IS the bottleneck and the
-# slice-store loop wins (131M edges/s/superstep at 192M edges). An
-# explicitly injected slice_store always takes the distributed loop
-# (callers on clusters without a shared FS know their topology better
-# than this heuristic). Same size-route pattern as connected_components'
-# two-phase threshold and the betweenness entrypoint.
-KERNEL_DISTRIBUTED_MIN_VERTICES = 2_000_000
-
-
-def _open_block(path: str):
-    """(srcs, dsts) positional arrays for one block — mmap for .npy pairs,
-    per-worker decompressed cache for legacy .npz files."""
-    if path.endswith(".npz"):
-        cached = _BLOCK_CACHE.get(path)
-        if cached is None:
-            with np.load(path) as z:
-                cached = (
-                    z["srcs"].astype(np.int64),
-                    z["dsts"].astype(np.int64),
-                )
-            _BLOCK_CACHE[path] = cached
-        return cached
-    return (
-        np.load(path + ".srcs.npy", mmap_mode="r"),
-        np.load(path + ".dsts.npy", mmap_mode="r"),
-    )
-
-
-def _open_block_weights(path: str):
-    """Per-edge weight array for one block (``with_weights=True`` layouts)."""
-    return np.load(path + ".ws.npy", mmap_mode="r")
-
-
-# Below this TOTAL edge count a kernel superstep loop runs its gathers on
-# the DRIVER over the (mmap'd or once-collected) block arrays instead of
-# scheduling one Spark job per superstep: at bench scale the per-superstep
-# job floor (~0.2-0.3 s: task scheduling + Arrow result assembly, measured
-# on the 100-superstep katz kernel row) dwarfs the actual gather (~10 ms at
-# 1.2M edges), so a 100-superstep run spends >90% of its wall in fixed
-# costs. The guarded driver loop is the same size-route pattern as the
-# dfs/astar/flow driver kernels: O(E) driver memory (~16 B/edge, 80 MB at
-# the cap), identical per-block update arithmetic (bit-exact results), and
-# the distributed loops remain the route above the cap (and whenever a
-# slice_store / resume contract is in play).
+# The driver cap of every kernel route. It counts the edge rows the driver
+# holds AFTER symmetrization — for a Graph input the rows its one Arrow
+# collect turns into (``supersteps.driver_edge_rows``), for prebuilt
+# blocks the block rows. At bench scale the per-superstep Spark job floor
+# (~0.2-0.3 s: task scheduling + Arrow result assembly, measured on the
+# 100-superstep katz kernel row) dwarfs the gather itself (~10 ms at 1.2M
+# edges), so below the cap every superstep runs on the driver: O(E) driver
+# memory (~16 B/row, 80 MB at the cap), same per-dst arithmetic as the
+# distributed executors.
 KERNEL_DRIVER_LOOP_MAX_EDGES = 5_000_000
 
 # ... and the dense driver vectors the loop iterates must stay reasonable
 # for sparse many-vertex layouts too (8 B x V per vector).
 KERNEL_DRIVER_LOOP_MAX_VERTICES = 20_000_000
 
+# Above the driver caps, FILE-BACKED layouts below this vertex count still
+# take the broadcast executor (tasks gather over the mmap'd blocks, the
+# driver applies): the slice-store executor's per-superstep fixed costs
+# (slice-file create/write/flush, per-pass jump jobs for CC) outweigh the
+# n*8 B driver vectors it avoids — 16 MB at this cap. Measured on a
+# file-backed Zipf layout (6M edges, 120k vertices, 4 blocks, local[4],
+# 4-core host; medians of 3-4 interleaved trials, broadcast vs slice store):
+# PageRank 10 supersteps 4.88 s vs 5.15 s, converged CC 1.28 s vs 2.37 s,
+# LPA 3 rounds 2.76 s vs 2.75 s. Above it the O(V)-per-superstep driver
+# collect + broadcast IS the bottleneck (131M edges/s/superstep for the
+# slice store at 192M edges).
+KERNEL_DISTRIBUTED_MIN_VERTICES = 2_000_000
+
+
+def _read_block(path: str, weighted: bool = False):
+    """(srcs, dsts_local, ws|None) of one file-backed block, mmap'd."""
+    return (
+        np.load(path + ".srcs.npy", mmap_mode="r"),
+        np.load(path + ".dsts.npy", mmap_mode="r"),
+        np.load(path + ".ws.npy", mmap_mode="r") if weighted else None,
+    )
+
+
+def _block_arrays(row, file_backed: bool, weighted: bool):
+    """(srcs, dsts_local, ws|None) for one manifest/blocks row."""
+    if file_backed:
+        return _read_block(row["path"], weighted)
+    return (
+        np.asarray(row["srcs"], dtype=np.int64),
+        np.asarray(row["dsts"], dtype=np.int64),
+        np.asarray(row["ws"], dtype=np.float64) if weighted else None,
+    )
+
+
+def block_edge_rows(eb) -> int:
+    """Total edge rows of a layout (already symmetrized): .npy headers of a
+    file-backed layout, one tiny aggregate of a Spark-held one."""
+    if eb.manifest is not None:
+        return sum(
+            np.load(r["path"] + ".dsts.npy", mmap_mode="r").shape[0]
+            for r in eb.manifest.collect()
+        )
+    total = eb.blocks.agg(F.sum(F.size("srcs")).alias("e")).collect()[0]["e"]
+    return int(total or 0)
+
+
+def _load_block_arrays(eb):
+    """``[(dst_lo, srcs, dsts, ws|None)]`` sorted by ``dst_lo`` (int64
+    positions, local dsts) — every block of the layout on the driver."""
+    if eb.manifest is not None:
+        rows = sorted((int(r["dst_lo"]), r["path"]) for r in eb.manifest.collect())
+        blks = [(lo, *_read_block(path, eb.has_weights)) for lo, path in rows]
+    else:
+        blks = [
+            (int(r["dst_lo"]), *_block_arrays(r, False, eb.has_weights))
+            for r in sorted(eb.blocks.collect(), key=lambda r: int(r["dst_lo"]))
+        ]
+    return [
+        (lo, np.asarray(s, dtype=np.int64), np.asarray(d, dtype=np.int64),
+         None if w is None else np.asarray(w))
+        for lo, s, d, w in blks
+    ]
+
 
 def driver_block_arrays(eb, max_edges: int | None = None):
     """``[(dst_lo, srcs, dsts, ws|None)]`` sorted by ``dst_lo``, or ``None``
-    when the layout exceeds ``max_edges`` (checked from .npy headers /
-    one tiny aggregate before any bulk load) or is not driver-readable.
-    ``max_edges`` defaults to the module's ``KERNEL_DRIVER_LOOP_MAX_EDGES``
-    read at call time (monkeypatchable in tests)."""
-    import os
-
+    when the layout's edge rows exceed ``max_edges`` (default: the driver
+    cap ``KERNEL_DRIVER_LOOP_MAX_EDGES``), counted before any bulk load."""
     if max_edges is None:
         max_edges = KERNEL_DRIVER_LOOP_MAX_EDGES
-
-    if eb.manifest is not None:
-        if not eb.spill_dir:
-            return None
-        rows = sorted(
-            (int(r["dst_lo"]), r["path"]) for r in eb.manifest.collect()
-        )
-        total = 0
-        for _, path in rows:
-            if path.endswith(".npz"):
-                return None
-            try:
-                total += np.load(path + ".dsts.npy", mmap_mode="r").shape[0]
-            except FileNotFoundError:
-                return None
-            if total > max_edges:
-                return None
-        out = []
-        for lo, path in rows:
-            srcs, dsts = _open_block(path)
-            ws = np.asarray(_open_block_weights(path)) if eb.has_weights else None
-            out.append(
-                (lo, np.asarray(srcs, dtype=np.int64),
-                 np.asarray(dsts, dtype=np.int64), ws)
-            )
-        return out
-    if eb.blocks is None:
+    if block_edge_rows(eb) > max_edges:
         return None
-    total = eb.blocks.agg(
-        F.sum(F.size("srcs")).alias("e")
-    ).collect()[0]["e"]
-    if total is None or total > max_edges:
-        return None
-    out = []
-    for r in sorted(eb.blocks.collect(), key=lambda r: int(r["dst_lo"])):
-        out.append(
-            (
-                int(r["dst_lo"]),
-                np.asarray(r["srcs"], dtype=np.int64),
-                np.asarray(r["dsts"], dtype=np.int64),
-                np.asarray(r["ws"], dtype=np.float64)
-                if eb.has_weights
-                else None,
-            )
-        )
-    return out
+    return _load_block_arrays(eb)
 
 
 class EdgeBlocks:
@@ -188,8 +164,7 @@ class EdgeBlocks:
                  out_deg: np.ndarray | None = None,
                  manifest: DataFrame | None = None,
                  spill_dir: str | None = None, n: int | None = None,
-                 n_dangling: int | None = None, has_weights: bool = False,
-                 self_votes_baked: bool = False):
+                 n_dangling: int | None = None, has_weights: bool = False):
         self.blocks = blocks_df
         self._node_ids = node_ids     # sorted original ids, position = index
         self._out_deg = out_deg       # out-degree per position
@@ -198,16 +173,10 @@ class EdgeBlocks:
         self.spill_dir = spill_dir    # set when file-backed
         self.n_dangling = n_dangling  # zero-out-degree count (file layout)
         self.has_weights = has_weights  # blocks carry a per-edge ws array
-        # True when the edge arrays already contain one self-loop row per
-        # node (legacy lpa_vote_blocks layouts): the LPA kernels then skip
-        # their synthetic per-block self-vote suffix to avoid double votes
-        self.self_votes_baked = self_votes_baked
 
     @property
     def node_ids(self) -> np.ndarray:
         if self._node_ids is None:
-            import os
-
             self._node_ids = np.load(
                 os.path.join(self.spill_dir, "node_ids.npy"), mmap_mode="r"
             )
@@ -216,16 +185,14 @@ class EdgeBlocks:
     @property
     def out_deg(self) -> np.ndarray:
         if self._out_deg is None:
-            import os
-
             deg_path = (
                 os.path.join(self.spill_dir, "out_deg.npy")
                 if self.spill_dir is not None
                 else None
             )
-            # file-backed degree-free layouts (cc_blocks/lpa_vote_blocks/
-            # label_blocks) must raise the same actionable message as
-            # in-memory ones, not a bare FileNotFoundError on the .npy
+            # file-backed degree-free layouts (cc_blocks/label_blocks) must
+            # raise the same actionable message as in-memory ones, not a
+            # bare FileNotFoundError on the .npy
             if deg_path is None or not os.path.exists(deg_path):
                 raise RuntimeError(
                     "EdgeBlocks built with_degrees=False carry no degree "
@@ -259,9 +226,6 @@ def shared_fs_available(spark, probe_dir: str) -> bool:
     nothing on the workers (ADVICE r5). The verdict is cached per
     (application, probe_dir) — ``applicationId`` is stable for the
     session's lifetime, where ``id(spark)`` could collide after GC."""
-    import os
-    import uuid
-
     master = spark.sparkContext.master or ""
     if master.startswith("local"):
         return True
@@ -300,7 +264,7 @@ def _blk_lo(k: int, n: int, nb: int) -> int:
     blocks by ``pos * nb // n``, whose exact inverse range is
     ``[ceil(k*n/nb), ceil((k+1)*n/nb))`` — a floor here silently
     misaligns ranges whenever ``nb`` does not divide ``n`` and the
-    distributed loop's width-truncated bincount would DROP the mass of
+    slice-store executor's width-truncated bincount would DROP the mass of
     positions past its floor-derived range end."""
     return -(-k * n // nb)
 
@@ -359,8 +323,6 @@ def _write_degree_files(
     pre-zeroed memmap files (ranges with no edges stay zero). Returns the
     dangling-vertex count — the only degree statistic the superstep loop
     needs on the driver."""
-    import os
-
     outp = os.path.join(spill_dir, "out_deg.npy")
     invp = os.path.join(spill_dir, "inv_deg.npy")
     for p in (outp, invp):
@@ -404,7 +366,6 @@ def build_edge_blocks(
     edges: DataFrame | None = None,
     with_weights: bool = False,
     with_degrees: bool = True,
-    self_votes_baked: bool = False,
 ) -> EdgeBlocks:
     """One-time layout step (a few shuffles total, then cached).
 
@@ -425,12 +386,11 @@ def build_edge_blocks(
     per block (absent weight column → 1.0), enabling the weighted kernels
     (katz). Block edge arrays are sorted by local dst so segmented kernels
     (min/mode via ``reduceat``) run without a per-round sort and the
-    bincount gather writes sequentially. ``with_degrees=False`` skips the
+    bincount gather writes sequentially. A file-backed layout has a block
+    (possibly empty) for EVERY dst range. ``with_degrees=False`` skips the
     out-degree/inverse-degree computation entirely — the degree-free
     kernels (katz/cc/lpa) save a full second pass over the |E|-row
     position table; such blocks cannot feed ``pagerank_kernel``."""
-    import os
-
     spark = graph.edges.sparkSession
     if num_blocks is None:
         num_blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -515,9 +475,8 @@ def build_edge_blocks(
         )
         # dst ranges with no incoming edges produce no group: materialize
         # an EMPTY block for each so coverage is always full — the
-        # distributed loop must still WRITE those slices every superstep
-        # (teleport + dangling mass), and partial coverage would demote the
-        # whole run to the driver-vector legacy loop
+        # slice-store executor must still WRITE those slices every
+        # superstep (teleport + dangling mass)
         present = {int(r["dst_lo"]) for r in manifest.collect()}  # O(nb)
         missing = [
             k for k in range(nb) if _blk_lo(k, n, nb) not in present
@@ -550,7 +509,6 @@ def build_edge_blocks(
             n=n,
             n_dangling=n_dangling,
             has_weights=with_weights,
-            self_votes_baked=self_votes_baked,
         )
         _save_metadata(eb, spill_dir)
         return eb
@@ -615,25 +573,17 @@ def build_edge_blocks(
     # unpersist (not destroy): the cached blocks' lineage references the
     # broadcast; a cache-miss recomputation must be able to re-fetch it
     bc_ids.unpersist()
-    return EdgeBlocks(blocks, node_ids, out_deg, has_weights=with_weights,
-                      self_votes_baked=self_votes_baked)
+    return EdgeBlocks(blocks, node_ids, out_deg, has_weights=with_weights)
 
 
 def _save_metadata(eb: EdgeBlocks, spill_dir: str) -> None:
-    import json
-    import os
-
     rows = [(r["path"], int(r["dst_lo"])) for r in eb.manifest.collect()]
     with open(os.path.join(spill_dir, "manifest.json"), "w") as f:
         json.dump(rows, f)
     with open(os.path.join(spill_dir, "meta.json"), "w") as f:
         json.dump(
-            {
-                "n": eb.n,
-                "n_dangling": eb.n_dangling,
-                "has_weights": eb.has_weights,
-                "self_votes_baked": eb.self_votes_baked,
-            },
+            {"n": eb.n, "n_dangling": eb.n_dangling,
+             "has_weights": eb.has_weights},
             f,
         )
 
@@ -644,54 +594,45 @@ def load_edge_blocks(spark, spill_dir: str) -> EdgeBlocks:
     (the scaling bench builds once and measures supersteps at several
     parallelism levels on the same blocks). Only the O(num_blocks)
     manifest and scalar metadata reach the driver; id/degree vectors stay
-    lazy mmaps."""
-    import json
-    import os
-
+    lazy mmaps. Directories without ``meta.json``, or with degrees but no
+    ``inv_deg.npy`` (layouts older than both files), are refused."""
+    meta_path = os.path.join(spill_dir, "meta.json")
+    has_deg = os.path.exists(os.path.join(spill_dir, "out_deg.npy"))
+    has_inv = os.path.exists(os.path.join(spill_dir, "inv_deg.npy"))
+    if not os.path.exists(meta_path) or has_deg != has_inv:
+        raise ValueError(
+            f"{spill_dir!r} is not a readable block layout (missing "
+            "meta.json or inv_deg.npy — written by an older layout "
+            "version); rebuild it with build_edge_blocks(..., spill_dir=...)"
+        )
     with open(os.path.join(spill_dir, "manifest.json")) as f:
         rows = json.load(f)
-    meta_path = os.path.join(spill_dir, "meta.json")
-    has_weights = False
-    self_votes_baked = False
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        n, n_dangling = int(meta["n"]), meta["n_dangling"]
-        has_weights = bool(meta.get("has_weights", False))
-        self_votes_baked = bool(meta.get("self_votes_baked", False))
-    else:  # pre-round-4 layout dirs
-        n = int(
-            np.load(os.path.join(spill_dir, "node_ids.npy"), mmap_mode="r").shape[0]
-        )
-        n_dangling = None
+    with open(meta_path) as f:
+        meta = json.load(f)
     manifest = spark.createDataFrame(rows, "path string, dst_lo long").repartition(
         max(1, len(rows))
     ).persist()
     manifest.count()
-    return EdgeBlocks(None, manifest=manifest, spill_dir=spill_dir, n=n,
-                      n_dangling=n_dangling, has_weights=has_weights,
-                      self_votes_baked=self_votes_baked)
+    return EdgeBlocks(None, manifest=manifest, spill_dir=spill_dir,
+                      n=int(meta["n"]), n_dangling=meta["n_dangling"],
+                      has_weights=bool(meta["has_weights"]))
 
 
 class LocalSliceStore:
     """Slice store backed by memmap files on a SHARED filesystem.
 
-    The distributed superstep loop reads/writes per-iteration rank vectors
-    through this interface; this implementation holds one ``.npy`` file per
-    iteration under ``run_dir`` and relies on every worker seeing the same
-    filesystem (local mode, NFS/Lustre on a cluster). Tasks write disjoint
-    dst ranges of the single file in place (safe) and readers mmap it, so
-    the OS page cache is shared host-wide. A cluster WITHOUT a shared
-    filesystem plugs a different implementation into
-    ``pagerank_kernel(slice_store=...)`` — anything satisfying this duck
-    type (put/get aux array, create/open/delete iteration vectors) works,
-    e.g. per-slice objects on an object store reassembled per worker. The
-    instance must be picklable (workers receive it inside the task
-    closure); this one carries only the ``run_dir`` string."""
+    The slice-store executor reads/writes per-iteration vectors through
+    the protocol documented in ``operators/slice_stores.py``; this
+    implementation holds one ``.npy`` file per iteration under ``run_dir``
+    and relies on every worker seeing the same filesystem (local mode,
+    NFS/Lustre on a cluster). Tasks write disjoint dst ranges of the single
+    file in place (safe) and readers mmap it, so the OS page cache is
+    shared host-wide. A cluster WITHOUT a shared filesystem plugs a
+    different implementation into ``*_kernel(slice_store=...)``, e.g.
+    :class:`slice_stores.ObjectSliceStore`. This instance carries only the
+    ``run_dir`` string and a cache token."""
 
     def __init__(self, run_dir: str):
-        import uuid
-
         self.run_dir = run_dir
         # per-instance cache token: reused Python workers hold a
         # process-global aux cache, so two runs pointing at the SAME
@@ -702,19 +643,13 @@ class LocalSliceStore:
 
     # -- lifecycle (driver)
     def init_run(self) -> None:
-        import os
-
         os.makedirs(self.run_dir, exist_ok=True)
 
     def cleanup(self) -> None:
-        import shutil
-
         shutil.rmtree(self.run_dir, ignore_errors=True)
 
     # -- aux vectors (write once on the driver, cached read on workers)
     def _aux_path(self, name: str) -> str:
-        import os
-
         return os.path.join(self.run_dir, f"{name}.npy")
 
     def put_aux(self, name: str, arr: np.ndarray) -> None:
@@ -723,18 +658,13 @@ class LocalSliceStore:
     def put_aux_file(self, name: str, src_path: str) -> None:
         """Register an EXISTING .npy file as this run's aux vector without
         copying it (the scale layout writes inv_deg.npy once at
-        build_edge_blocks time; every run links it). Stores without this
-        method get the array streamed through ``put_aux`` instead."""
-        import os
-
+        build_edge_blocks time; every run links it)."""
         dst = self._aux_path(name)
         if os.path.exists(dst):
             return  # idempotent: resumed runs re-register the same aux
         try:
             os.symlink(os.path.abspath(src_path), dst)
         except (OSError, NotImplementedError):
-            import shutil
-
             shutil.copyfile(src_path, dst)
 
     def get_aux(self, name: str) -> np.ndarray:
@@ -759,14 +689,12 @@ class LocalSliceStore:
 
     # -- per-iteration vectors
     def _vec_path(self, iteration: int) -> str:
-        import os
-
         return os.path.join(self.run_dir, f"r_{iteration:05d}.npy")
 
     def create_vector(self, iteration: int, n: int, dtype=np.float64) -> None:
         """Driver: allocate iteration vector (sparse file header only).
-        ``dtype`` defaults to float64 (rank vectors); the CC loop stores
-        int64 label vectors through the same interface."""
+        ``dtype`` defaults to float64 (rank vectors); the label programs
+        store int64 label vectors through the same interface."""
         np.lib.format.open_memmap(
             self._vec_path(iteration), mode="w+", dtype=dtype, shape=(n,)
         ).flush()
@@ -790,12 +718,7 @@ class LocalSliceStore:
     def flush(self, handle: np.ndarray) -> None:
         handle.flush()
 
-    def read_result(self, iteration: int) -> np.ndarray:
-        return np.array(np.load(self._vec_path(iteration), mmap_mode="r"))
-
     def delete_vector(self, iteration: int) -> None:
-        import os
-
         for p in (self._vec_path(iteration), self._vec_path(iteration) + ".ok"):
             try:
                 os.unlink(p)
@@ -810,18 +733,12 @@ class LocalSliceStore:
     # reported back. Same commit protocol as CheckpointManager's _SUCCESS
     # markers on the join path.
     def put_meta(self, meta: dict) -> None:
-        import json
-        import os
-
         tmp = os.path.join(self.run_dir, "run_meta.json.tmp")
         with open(tmp, "w") as f:
             json.dump(meta, f)
         os.replace(tmp, os.path.join(self.run_dir, "run_meta.json"))
 
     def get_meta(self) -> dict | None:
-        import json
-        import os
-
         p = os.path.join(self.run_dir, "run_meta.json")
         if not os.path.exists(p):
             return None
@@ -833,246 +750,14 @@ class LocalSliceStore:
             f.write("ok")
 
     def latest_complete(self) -> int | None:
-        import glob
-        import os
-        import re
-
         best = None
         for p in glob.glob(os.path.join(self.run_dir, "r_*.npy.ok")):
-            m = re.match(r"r_(-?\d+)\.npy\.ok$", os.path.basename(p))
+            m = re.match(r"r_(\d+)\.npy\.ok$", os.path.basename(p))
             if m and os.path.exists(p[:-3]):
                 it = int(m.group(1))
                 if best is None or it > best:
                     best = it
         return best
-
-
-def _distributed_superstep_loop(
-    spark,
-    eb: EdgeBlocks,
-    inv_deg: np.ndarray | None,
-    damping: float,
-    total: int,
-    tolerance: float,
-    fixed_iterations: int | None,
-    metrics_sink: list | None,
-    slice_store=None,
-    resume: bool = False,
-):
-    """Fully distributed supersteps for file-backed blocks with FULL block
-    coverage: the rank vector NEVER crosses the driver during iteration.
-
-    ``resume=True`` (requires an injected ``slice_store`` whose location
-    survived the crash): restart from the newest COMMITTED iteration
-    vector — the driver stamps a completion marker only after every slice
-    reported back, so a vector half-written by a dying run is never
-    resumed from. The dangling mass of the restored vector is recomputed
-    by one O(num_blocks)-row recovery job; run metadata (n, damping) is
-    verified against the store so a stale directory from a DIFFERENT run
-    fails loudly instead of converging to garbage. This is the kernel
-    path's counterpart to the join path's CheckpointManager mid-iteration
-    resume (north rule: supersteps survive executor/driver loss).
-
-    Each task gathers its dst-slice (bincount over its CSR block, weights
-    read from the previous iteration's slice files via a per-worker
-    assembled cache), applies the rank update with the two driver scalars
-    (dangling mass, base) folded in as constants, WRITES its new slice, and
-    returns only (err, dangling-mass) partial scalars. The driver per
-    superstep does: schedule one job + sum ~num_blocks scalar rows — no
-    O(V) serialization, no per-worker broadcast fetch. This removes the
-    measured ~1 s/superstep serial driver fraction that capped thread
-    scaling (on a cluster the slice files live on a shared store / shuffle
-    service; the broadcast path below remains the no-shared-fs fallback).
-
-    Returns the final ``(id, rank)`` DataFrame (assembled DISTRIBUTEDLY —
-    each task emits its dst-range slice from the mmap'd id + rank files, so
-    neither vector ever crosses the driver), or None if coverage is partial
-    (caller falls back to the legacy loop). All vector I/O goes through the
-    slice store (default :class:`LocalSliceStore` under the blocks'
-    spill_dir). ``inv_deg`` may be None when the layout wrote
-    ``inv_deg.npy`` (the scale path) — the file is linked into the run as
-    the aux vector and the dangling count comes from the layout metadata,
-    keeping driver state O(num_blocks) end to end."""
-    import os
-    import uuid
-
-    import pandas as pd
-
-    n = eb.n
-    rows = [(r["path"], int(r["dst_lo"])) for r in eb.manifest.collect()]
-    nb = len(rows)
-    los = sorted(lo for _, lo in rows)
-    if nb == 0 or los != [_blk_lo(k, n, nb) for k in range(nb)]:
-        return None  # empty ranges -> legacy loop handles them
-    hi_of = {_blk_lo(k, n, nb): _blk_lo(k + 1, n, nb) for k in range(nb)}
-    store = slice_store
-    if store is None:
-        store = LocalSliceStore(
-            os.path.join(eb.spill_dir, f"run_{uuid.uuid4().hex[:12]}")
-        )
-    store.init_run()
-    if inv_deg is not None:
-        store.put_aux("invdeg", inv_deg)
-        n_dangling = int((inv_deg == 0.0).sum())
-    else:
-        inv_path = os.path.join(eb.spill_dir, "inv_deg.npy")
-        if not os.path.exists(inv_path):
-            # pre-round-4 layout dir (only out_deg.npy): derive the inverse
-            # file once, streamed chunk-wise through mmaps
-            deg = np.load(os.path.join(eb.spill_dir, "out_deg.npy"), mmap_mode="r")
-            mi = np.lib.format.open_memmap(
-                inv_path, mode="w+", dtype=np.float64, shape=(n,)
-            )
-            step_sz = 1 << 24
-            for lo in range(0, n, step_sz):
-                d = np.asarray(deg[lo : lo + step_sz])
-                mi[lo : lo + step_sz] = np.where(
-                    d == 0.0, 0.0, 1.0 / np.maximum(d, 1.0)
-                )
-            mi.flush()
-        if hasattr(store, "put_aux_file"):
-            store.put_aux_file("invdeg", inv_path)
-        else:  # custom store: stream the file through, never resident
-            store.put_aux("invdeg", np.load(inv_path, mmap_mode="r"))
-        if eb.n_dangling is not None:
-            n_dangling = int(eb.n_dangling)
-        else:  # pre-round-4 layout dir: stream-count from the mmap
-            n_dangling = int(
-                (np.asarray(np.load(inv_path, mmap_mode="r")) == 0.0).sum()
-            )
-    slice_meta = sorted((lo, hi_of[lo]) for _, lo in rows)
-    danglesum = float(n_dangling) / n  # of the uniform r0
-    base = (1.0 - damping) / n
-    err = None
-
-    durable = hasattr(store, "mark_complete") and hasattr(
-        store, "latest_complete"
-    )
-    start_it = 0
-    if resume and durable:
-        prior = store.get_meta() if hasattr(store, "get_meta") else None
-        latest = store.latest_complete()
-        if prior is not None and latest is not None:
-            if prior.get("n") != n or prior.get("damping") != damping:
-                raise ValueError(
-                    "resume requested but the slice store holds a different "
-                    f"run (stored n={prior.get('n')} damping="
-                    f"{prior.get('damping')}, this run n={n} damping="
-                    f"{damping})"
-                )
-            start_it = latest + 1
-    if start_it == 0:
-        if hasattr(store, "put_meta"):
-            store.put_meta({"n": n, "damping": damping})
-        store.write_full(-1, np.full(n, 1.0 / n))
-        if durable:
-            store.mark_complete(-1)
-    else:
-        # recover the restored vector's dangling mass: one slice-scalar
-        # per dst-range, never the vector itself
-        rv = start_it - 1
-
-        def recover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            vec = store.open_read(rv)
-            inv = store.get_aux("invdeg")
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    lo = int(row["dst_lo"])
-                    hi = hi_of[lo]
-                    vs = np.asarray(vec[lo:hi])
-                    yield pd.DataFrame(
-                        {"dangle": [float(vs[np.asarray(inv[lo:hi]) == 0.0].sum())]}
-                    )
-
-        danglesum = float(
-            eb.manifest.mapInPandas(recover, schema="dangle double")
-            .toPandas()["dangle"]
-            .sum()
-        )
-
-    for it in range(start_it, total):
-        const_term = damping * danglesum / n + base
-        cur = it
-        store.create_vector(cur, n)
-
-        def step(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            prev = store.open_read(cur - 1)
-            out_vec = store.open_write(cur)
-            inv = store.get_aux("invdeg")
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    srcs, dsts = _open_block(row["path"])
-                    lo = int(row["dst_lo"])
-                    hi = hi_of[lo]  # static evenly-spaced ranges
-                    width = hi - lo
-                    w = prev[srcs] * inv[srcs]
-                    g = np.bincount(dsts, weights=w, minlength=width)[:width]
-                    new_slice = damping * g + const_term
-                    out_vec[lo:hi] = new_slice
-                    prev_slice = prev[lo:hi]
-                    inv_slice = inv[lo:hi]
-                    yield pd.DataFrame(
-                        {
-                            "dst_lo": [np.int64(lo)],
-                            "err": [float(np.abs(new_slice - prev_slice).sum())],
-                            "dangle": [float(new_slice[inv_slice == 0.0].sum())],
-                        }
-                    )
-            store.flush(out_vec)
-
-        out = eb.manifest.mapInPandas(
-            step, schema="dst_lo long, err double, dangle double"
-        ).toPandas()
-        if set(out["dst_lo"]) != {lo for lo, _ in slice_meta}:
-            store.cleanup()
-            raise RuntimeError("distributed superstep lost a slice")
-        err = float(out["err"].sum())
-        danglesum = float(out["dangle"].sum())
-        if durable:
-            # commit point: every slice validated above — a crash from
-            # here on resumes at it+1; a crash before it re-runs it
-            store.mark_complete(cur)
-        if metrics_sink is not None:
-            metrics_sink.append({"iteration": it, "l1_error": err})
-        if it >= 1:
-            store.delete_vector(it - 2)
-        if fixed_iterations is None and err < n * tolerance:
-            total = it + 1
-            break
-    else:
-        if fixed_iterations is None:
-            store.cleanup()
-            raise ConvergenceError(
-                f"pagerank_kernel failed to converge (err={err!r})"
-            )
-    # distributed result assembly: one task per dst-range emits (id, rank)
-    # from the mmap'd id file + final slice vector; localCheckpoint pins the
-    # result before the run dir is deleted. Neither vector touches the
-    # driver.
-    ids_path = os.path.join(eb.spill_dir, "node_ids.npy")
-    final_it = total - 1
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids = np.load(ids_path, mmap_mode="r")
-        r = store.open_read(final_it)
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                lo = int(row["dst_lo"])
-                hi = hi_of[lo]
-                yield pd.DataFrame(
-                    {
-                        "id": np.asarray(ids[lo:hi]),
-                        "rank": np.asarray(r[lo:hi]),
-                    }
-                )
-
-    from metagraph_spark.state import truncate_lineage
-
-    result = truncate_lineage(
-        eb.manifest.mapInPandas(emit, schema="id long, rank double")
-    )
-    store.cleanup()
-    return result
 
 
 def pagerank_kernel(
@@ -1085,214 +770,22 @@ def pagerank_kernel(
     slice_store=None,
     resume: bool = False,
 ) -> DataFrame:
-    """PageRank via the CSR/Arrow kernel. Returns ``(id, rank)``.
+    """PageRank via the CSR kernel. Returns ``(id, rank)``.
 
-    ``resume=True`` restarts a crashed run from its newest committed
-    iteration vector in ``slice_store`` (which is therefore required —
-    the default store lives under a fresh uuid dir per call and can never
-    hold prior state); see ``_distributed_superstep_loop``.
+    Accepts a Graph or a prebuilt EdgeBlocks (amortize the layout across
+    runs); the executor is chosen by ``supersteps.choose_executor``. A
+    Graph below the driver cap runs on the driver over one Arrow collect;
+    larger inputs build (or use) a block layout — file-backed blocks run
+    the slice-store executor (the rank vector never crosses the driver),
+    Spark-held blocks the broadcast executor. ``slice_store`` injects the
+    iteration-vector storage of the slice-store executor (file-backed
+    blocks only); ``resume=True`` restarts a crashed run from the newest
+    committed vector in that store (which is therefore required)."""
+    from metagraph_spark.operators import supersteps as S
 
-    Accepts a Graph (builds blocks internally) or a prebuilt EdgeBlocks
-    (amortize the layout across runs). File-backed blocks with full range
-    coverage run the fully distributed superstep loop (rank vector never
-    crosses the driver, see ``_distributed_superstep_loop``) when the
-    vertex count reaches ``KERNEL_DISTRIBUTED_MIN_VERTICES`` or a
-    ``slice_store`` is injected; below that the broadcast/collect loop is
-    faster (size route, VERDICT r4 #3) and runs instead — reading the
-    same mmap'd block files. ``slice_store`` injects the
-    iteration-vector storage for the distributed loop (default
-    :class:`LocalSliceStore` under the blocks' spill_dir — shared-FS
-    semantics; supply an object-store-backed implementation on clusters
-    without one)."""
-    if isinstance(graph_or_blocks, EdgeBlocks):
-        eb = graph_or_blocks
-        owned = False
-        spark = (eb.blocks if eb.blocks is not None else eb.manifest).sparkSession
-    else:
-        eb = build_edge_blocks(graph_or_blocks)
-        owned = True
-        spark = graph_or_blocks.edges.sparkSession
-    n = eb.n
-    if n == 0:
-        return spark.createDataFrame([], "id long, rank double")
-    sc = spark.sparkContext
-
-    total = fixed_iterations if fixed_iterations is not None else maxiter
-    err = None
-
-    file_backed = eb.manifest is not None
-    source_df = eb.manifest if file_backed else eb.blocks
-    if slice_store is not None and not file_backed:
-        # same contract as pagerank(strategy="kernel", checkpointer=...):
-        # never silently drop an explicitly requested store
-        raise ValueError(
-            "slice_store requires file-backed blocks "
-            "(build_edge_blocks(..., spill_dir=...)); in-memory blocks run "
-            "the broadcast/collect loop, which keeps no slice vectors"
-        )
-    if resume and slice_store is None:
-        raise ValueError(
-            "resume=True requires an injected slice_store (the default "
-            "store lives under a fresh uuid dir per call and can never "
-            "hold a prior run's vectors)"
-        )
-
-    # size route (round 6): small layouts run the whole superstep loop on
-    # the driver over the block arrays — no Spark job per superstep at all
-    # (see KERNEL_DRIVER_LOOP_MAX_EDGES). Never when a durable slice-store
-    # contract is in play.
-    if slice_store is None and not resume and n <= KERNEL_DRIVER_LOOP_MAX_VERTICES:
-        blks = driver_block_arrays(eb)
-        if blks is not None:
-            out_deg_l = np.asarray(eb.out_deg)
-            dangling_l = out_deg_l == 0
-            inv_l = np.where(dangling_l, 0.0, 1.0 / np.maximum(out_deg_l, 1.0))
-            r = np.full(n, 1.0 / n)
-            base = (1.0 - damping) / n
-            for it in range(total):
-                contrib = r * inv_l
-                g_vec = np.zeros(n)
-                for lo, srcs, dsts, _ws in blks:
-                    if len(srcs) == 0:
-                        continue
-                    g = np.bincount(dsts, weights=contrib[srcs])
-                    g_vec[lo : lo + len(g)] += g
-                danglesum = r[dangling_l].sum()
-                new_r = damping * g_vec + damping * danglesum / n + base
-                err = np.abs(new_r - r).sum()
-                if metrics_sink is not None:
-                    metrics_sink.append(
-                        {"iteration": it, "l1_error": float(err)}
-                    )
-                r = new_r
-                if fixed_iterations is None and err < n * tolerance:
-                    break
-            else:
-                if fixed_iterations is None:
-                    if owned:
-                        eb.unpersist()
-                    raise ConvergenceError(
-                        f"pagerank_kernel failed to converge in {maxiter} "
-                        f"iterations (err={err!r})"
-                    )
-            result = spark.createDataFrame(
-                pd.DataFrame({"id": np.asarray(eb.node_ids), "rank": r}),
-                schema="id long, rank double",
-            )
-            if owned:
-                eb.unpersist()
-            return result
-
-    # size route (VERDICT r4 #3): tiny file-backed layouts pay more in
-    # distributed-loop fixed costs than the driver vectors they avoid —
-    # see KERNEL_DISTRIBUTED_MIN_VERTICES. An injected store always wins.
-    run_distributed = file_backed and (
-        slice_store is not None
-        or (eb.spill_dir is not None and n >= KERNEL_DISTRIBUTED_MIN_VERTICES)
+    return S.run_kernel(
+        S.PageRank(damping, maxiter, tolerance, fixed_iterations),
+        graph_or_blocks,
+        lambda g, spill_dir: build_edge_blocks(g, spill_dir=spill_dir),
+        metrics_sink=metrics_sink, slice_store=slice_store, resume=resume,
     )
-    if run_distributed:
-        import os
-
-        # scale layout: the inverse-degree vector is already a file — pass
-        # None so the loop links it, keeping the driver free of O(V) arrays
-        has_deg_file = eb.spill_dir is not None and (
-            os.path.exists(os.path.join(eb.spill_dir, "inv_deg.npy"))
-            or os.path.exists(os.path.join(eb.spill_dir, "out_deg.npy"))
-        )
-        inv_arg = None
-        if not has_deg_file:
-            od = np.asarray(eb.out_deg)
-            inv_arg = np.where(od == 0.0, 0.0, 1.0 / np.maximum(od, 1.0))
-        r_df = _distributed_superstep_loop(
-            spark, eb, inv_arg, damping, total, tolerance,
-            fixed_iterations, metrics_sink, slice_store=slice_store,
-            resume=resume,
-        )
-        if r_df is not None:
-            if owned:
-                eb.unpersist()
-            return r_df
-
-    # legacy broadcast/collect loop: driver holds the dense vectors (the
-    # in-memory small-graph path; capped by KERNEL_MAX_VERTICES)
-    out_deg = np.asarray(eb.out_deg)
-    dangling_mask = out_deg == 0
-    inv_deg = np.where(dangling_mask, 0.0, 1.0 / np.maximum(out_deg, 1.0))
-    r = np.full(n, 1.0 / n)
-    base = (1.0 - damping) / n
-
-    vec_dir = None  # legacy loop: broadcast distribution
-
-    for it in range(total):
-        contrib = r * inv_deg
-        if vec_dir is not None:
-            import os
-            import uuid
-
-            vec_path = os.path.join(
-                vec_dir, f"contrib_{uuid.uuid4().hex[:12]}.npy"
-            )
-            np.save(vec_path, contrib)
-            bc = None
-        else:
-            vec_path = None
-            bc = sc.broadcast(contrib)
-
-        def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            c = (
-                np.load(vec_path, mmap_mode="r")
-                if vec_path is not None
-                else bc.value
-            )
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    if file_backed:
-                        srcs, dsts = _open_block(row["path"])
-                    else:
-                        srcs = np.asarray(row["srcs"], dtype=np.int64)
-                        dsts = np.asarray(row["dsts"], dtype=np.int64)
-                    g = np.bincount(dsts, weights=np.asarray(c)[srcs])
-                    # one array row per block (dense dst-range slice):
-                    # minimal Arrow row overhead on the collect path
-                    yield pd.DataFrame(
-                        {"dst_lo": [np.int64(row["dst_lo"])], "g": [g]}
-                    )
-
-        out = source_df.mapInPandas(
-            gather, schema="dst_lo long, g array<double>"
-        ).toPandas()
-        if bc is not None:
-            bc.unpersist()
-        if vec_path is not None:
-            import os
-
-            os.unlink(vec_path)
-        # each edge contributes to exactly one block, but a block's bincount
-        # slice may carry leading zeros below its true min position — so
-        # accumulate (+=), never assign, to avoid clobbering a neighbor's
-        # boundary entry
-        g_vec = np.zeros(n)
-        for lo, g in zip(out["dst_lo"], out["g"]):
-            g_vec[lo : lo + len(g)] += g
-        danglesum = r[dangling_mask].sum()
-        new_r = damping * g_vec + damping * danglesum / n + base
-        err = np.abs(new_r - r).sum()
-        if metrics_sink is not None:
-            metrics_sink.append({"iteration": it, "l1_error": float(err)})
-        r = new_r
-        if fixed_iterations is None and err < n * tolerance:
-            break
-    else:
-        if fixed_iterations is None:
-            if owned:
-                eb.unpersist()
-            raise ConvergenceError(
-                f"pagerank_kernel failed to converge in {maxiter} iterations "
-                f"(err={err!r})"
-            )
-    result = spark.createDataFrame(
-        pd.DataFrame({"id": eb.node_ids, "rank": r}), schema="id long, rank double"
-    )
-    if owned:
-        eb.unpersist()
-    return result

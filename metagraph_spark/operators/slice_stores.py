@@ -1,35 +1,42 @@
-"""Alternative slice-store implementations.
+"""The slice-store protocol, and an object-store implementation of it.
 
-:class:`kernel.LocalSliceStore` is the shared-filesystem implementation
-the distributed superstep loops default to. This module adds
-:class:`ObjectSliceStore`, a reference implementation over PURE
-object-store semantics — every interaction is a whole-object PUT, GET,
-LIST-by-prefix, or DELETE of immutable byte blobs, exactly the surface an
-S3/GCS client offers. It doubles as the in-repo proof (VERDICT r4 #7)
-that the slice-store duck type is sufficient WITHOUT a shared
-filesystem: the pagerank/CC/LPA distributed loops pass their parity
-tests against it (tests/test_kernel_algos.py), touching no mmap, no
-``r+`` views, no symlinks, and no cross-task file mutation.
-
-The exact method contract a real object-store implementation needs
-(all instances must be PICKLABLE — workers receive them in task
-closures):
+The slice-store executor (``operators/supersteps.py:SliceStore``) keeps
+every iteration vector of a kernel run in a *slice store*: tasks read the
+previous vector and write their disjoint dst slices of the next one, and
+the driver only ever sees one row of scalars per slice. Vector ``k`` is the
+state after ``k`` supersteps. Every method below is REQUIRED, and instances
+must be PICKLABLE (workers receive them in task closures):
 
 - ``init_run()`` / ``cleanup()`` — run lifecycle (driver).
-- ``put_aux(name, arr)`` / ``get_aux(name)`` — static per-run vectors
-  (inverse degrees). ``put_aux_file`` is OPTIONAL; stores without it
-  receive the array via ``put_aux`` instead (the loops check
-  ``hasattr``).
+- ``put_aux(name, arr)`` / ``put_aux_file(name, npy_path)`` /
+  ``get_aux(name)`` — a static per-run vector (PageRank's inverse
+  degrees), given as an array or as an existing ``.npy`` file.
 - ``create_vector(iteration, n, dtype=float64)`` — declare an iteration
   vector (may be a no-op: slices arrive as objects).
 - ``write_full(iteration, arr)`` — driver writes a complete vector
-  (initial state).
-- ``open_write(iteration)`` → handle supporting
-  ``handle[lo:hi] = slice`` (tasks write DISJOINT dst ranges), then
-  ``flush(handle)`` — flush must durably publish the written ranges.
+  (the initial state).
+- ``open_write(iteration)`` → handle supporting ``handle[lo:hi] = slice``
+  (tasks write DISJOINT dst ranges), then ``flush(handle)`` — flush must
+  durably publish the written ranges.
 - ``open_read(iteration)`` → ndarray-like with random access over the
-  FULL previous vector (tasks gather ``prev[srcs]``).
-- ``delete_vector(iteration)`` — retire an old iteration.
+  FULL vector (tasks gather ``prev[srcs]``).
+- ``delete_vector(iteration)`` — retire an iteration (and its marker).
+- ``put_meta(dict)`` / ``get_meta()`` — the run identity (program, n and
+  the parameters that shape the vectors); ``resume`` refuses a store
+  whose identity differs.
+- ``mark_complete(iteration)`` / ``latest_complete()`` — the commit
+  marker, stamped by the driver only after every slice of the vector
+  reported back; ``resume`` restarts from the newest marked vector, so a
+  half-written vector is never resumed from.
+
+:class:`kernel.LocalSliceStore` is the shared-filesystem implementation
+the executor defaults to. :class:`ObjectSliceStore` below implements the
+protocol over PURE object-store semantics — every interaction is a
+whole-object PUT, GET, LIST-by-prefix, or DELETE of immutable byte blobs,
+exactly the surface an S3/GCS client offers — and is the in-repo proof
+that the protocol needs no shared filesystem: the kernel programs pass
+their parity tests against it (tests/test_kernel_algos.py), touching no
+mmap, no ``r+`` views, no symlinks, and no cross-task file mutation.
 
 Backing "bucket": a directory of one-file-per-key blobs. The files are
 only ever written whole and read whole — swap ``_put/_get/_list/_del``
@@ -119,15 +126,16 @@ class ObjectSliceStore:
     def put_aux(self, name: str, arr: np.ndarray) -> None:
         self._put(f"aux/{name}", self._dumps(arr))
 
+    def put_aux_file(self, name: str, src_path: str) -> None:
+        self.put_aux(name, np.load(src_path, mmap_mode="r"))
+
     def get_aux(self, name: str) -> np.ndarray:
         return self._loads(self._get(f"aux/{name}"))
 
     # -- per-iteration vectors --------------------------------------------
     @staticmethod
     def _vec_prefix(iteration: int) -> str:
-        # iteration indices may be -1 (the initial rank vector); keep keys
-        # lexicographically clean with an offset
-        return f"vec/{iteration + 1:06d}/"
+        return f"vec/{iteration:06d}/"
 
     def create_vector(self, iteration: int, n: int, dtype=np.float64) -> None:
         pass  # slices arrive as immutable objects; nothing to preallocate
@@ -168,9 +176,6 @@ class ObjectSliceStore:
             out[lo : lo + len(a)] = a
         return out
 
-    def read_result(self, iteration: int) -> np.ndarray:
-        return self.open_read(iteration)
-
     def delete_vector(self, iteration: int) -> None:
         for k in self._list(self._vec_prefix(iteration)):
             self._del(k)
@@ -182,7 +187,7 @@ class ObjectSliceStore:
     # marker itself the commit point (the S3 semantics being proven)
     @staticmethod
     def _ok_key(iteration: int) -> str:
-        return f"ok/{iteration + 1:06d}"
+        return f"ok/{iteration:06d}"
 
     def put_meta(self, meta: dict) -> None:
         import json
@@ -204,4 +209,4 @@ class ObjectSliceStore:
         keys = self._list("ok/")
         if not keys:
             return None
-        return max(int(k.rsplit("/", 1)[1]) for k in keys) - 1
+        return max(int(k.rsplit("/", 1)[1]) for k in keys)

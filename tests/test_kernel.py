@@ -59,33 +59,6 @@ def test_pagerank_auto_strategy_threshold(spark):
 
 
 @pytest.mark.slow
-def test_kernel_file_backed_distributed_golden(spark, tmp_path, monkeypatch):
-    """File-backed blocks take the fully distributed superstep loop (rank
-    vector never on the driver) — must still produce the golden values and
-    agree with the in-memory path. The size route would send a 4-node
-    graph to the broadcast loop, so pin the threshold to 0 here."""
-    from metagraph_spark.operators import kernel as K
-
-    monkeypatch.setattr(K, "KERNEL_DISTRIBUTED_MIN_VERTICES", 0)
-    g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
-    eb = build_edge_blocks(g, num_blocks=2, spill_dir=str(tmp_path / "blocks"))
-    got = {r["id"]: r["rank"] for r in
-           pagerank_kernel(eb, damping=0.85, maxiter=50, tolerance=1e-7).collect()}
-    for node, expected in GOLDEN_EXPECTED.items():
-        assert math.isclose(got[node], expected, rel_tol=1e-5), (node, got[node])
-    # fixed-iteration parity with the in-memory (broadcast/collect) path
-    mem = build_edge_blocks(g, num_blocks=2)
-    a = {r["id"]: r["rank"] for r in
-         pagerank_kernel(eb, fixed_iterations=7).collect()}
-    b = {r["id"]: r["rank"] for r in
-         pagerank_kernel(mem, fixed_iterations=7).collect()}
-    for k in a:
-        assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15)
-    eb.unpersist()
-    mem.unpersist()
-
-
-@pytest.mark.slow
 def test_kernel_blocks_reuse(spark):
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
     eb = build_edge_blocks(g, num_blocks=2)
@@ -94,45 +67,6 @@ def test_kernel_blocks_reuse(spark):
     r2 = {r["id"]: r["rank"] for r in
           pagerank_kernel(eb, maxiter=50, tolerance=1e-7).collect()}
     assert r1 == r2
-    eb.unpersist()
-
-
-def test_kernel_broadcast_fallback_decision(spark, monkeypatch):
-    """Without a spill_dir (and without an injected slice store) the kernel
-    must take the broadcast/collect loop — the distributed superstep loop
-    assumes a shared slice store and must not be entered."""
-    from metagraph_spark.operators import kernel as K
-
-    def boom(*a, **kw):  # pragma: no cover - failure path
-        raise AssertionError("distributed loop entered without a slice store")
-
-    monkeypatch.setattr(K, "_distributed_superstep_loop", boom)
-    g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
-    eb = build_edge_blocks(g, num_blocks=2)  # in-memory, no spill_dir
-    got = {r["id"]: r["rank"] for r in
-           pagerank_kernel(eb, damping=0.85, maxiter=50, tolerance=1e-7).collect()}
-    for node, expected in GOLDEN_EXPECTED.items():
-        assert math.isclose(got[node], expected, rel_tol=1e-5)
-    eb.unpersist()
-
-
-def test_kernel_size_route_small_file_backed(spark, tmp_path, monkeypatch):
-    """A file-backed layout BELOW KERNEL_DISTRIBUTED_MIN_VERTICES takes the
-    broadcast/collect loop (distributed-loop fixed costs dominate at toy
-    scale — VERDICT r4 #3); goldens must still hold reading the mmap'd
-    block files."""
-    from metagraph_spark.operators import kernel as K
-
-    def boom(*a, **kw):  # pragma: no cover - failure path
-        raise AssertionError("distributed loop entered below the size route")
-
-    monkeypatch.setattr(K, "_distributed_superstep_loop", boom)
-    g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
-    eb = build_edge_blocks(g, num_blocks=2, spill_dir=str(tmp_path / "blocks"))
-    got = {r["id"]: r["rank"] for r in
-           pagerank_kernel(eb, damping=0.85, maxiter=50, tolerance=1e-7).collect()}
-    for node, expected in GOLDEN_EXPECTED.items():
-        assert math.isclose(got[node], expected, rel_tol=1e-5)
     eb.unpersist()
 
 
@@ -197,25 +131,19 @@ def test_slice_store_rejected_for_in_memory_blocks(spark, tmp_path):
     eb.unpersist()
 
 
-def test_scale_layout_no_driver_arrays(spark, tmp_path, monkeypatch):
+def test_scale_layout_no_driver_arrays(spark, tmp_path):
     """The file-backed layout must keep driver state O(num_blocks): no
     sorted-id or degree array is ever collected (VERDICT r3 #5). The lazy
     ``_node_ids``/``_out_deg`` slots must stay None through layout AND a
-    full pagerank run; the id/degree/inverse-degree vectors live as files
-    written slice-wise by tasks, and the layout metadata carries the
-    dangling count so the superstep loop needs no degree scan."""
+    full pagerank run on the slice-store executor (the driver executor
+    holds dense vectors BY DESIGN); the id/degree/inverse-degree vectors
+    live as files written slice-wise by tasks."""
     import json
     import os
 
     import numpy as np
 
-    from metagraph_spark.operators import kernel as K
-
-    monkeypatch.setattr(K, "KERNEL_DISTRIBUTED_MIN_VERTICES", 0)
-    # ... and force past the round-6 small-graph driver loop, which holds
-    # dense driver vectors BY DESIGN below its edge cap — this test pins
-    # the DISTRIBUTED mode's O(num_blocks) driver-state property
-    monkeypatch.setattr(K, "KERNEL_DRIVER_LOOP_MAX_EDGES", -1)
+    from metagraph_spark.operators import supersteps as S
 
     # golden graph + an isolated node (exercises the no-edges degree range)
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
@@ -223,8 +151,8 @@ def test_scale_layout_no_driver_arrays(spark, tmp_path, monkeypatch):
     eb = build_edge_blocks(g, num_blocks=2, spill_dir=sd)
     assert eb._node_ids is None and eb._out_deg is None
     assert eb.n == 4 and eb.n_dangling == 0  # every golden node has out-edges
-    got = {r["id"]: r["rank"] for r in
-           pagerank_kernel(eb, damping=0.85, maxiter=50, tolerance=1e-7).collect()}
+    got = {r["id"]: r["rank"] for r in S.run_supersteps(
+        S.PageRank(0.85, 50, 1e-7), eb, S.SliceStore()).collect()}
     # the whole run must not have materialized driver arrays either
     assert eb._node_ids is None and eb._out_deg is None
     for node, expected in GOLDEN_EXPECTED.items():
@@ -242,14 +170,11 @@ def test_scale_layout_no_driver_arrays(spark, tmp_path, monkeypatch):
     eb.unpersist()
 
 
-def test_scale_layout_dangling_and_isolates(spark, tmp_path, monkeypatch):
+def test_scale_layout_dangling_and_isolates(spark, tmp_path):
     """Dangling vertices (no out-edges) and ranges with no sources must
-    land as zero degree / zero inverse in the task-written files, and the
-    metadata dangling count must drive the same teleport mass as the
-    in-memory path."""
-    from metagraph_spark.operators import kernel as K
-
-    monkeypatch.setattr(K, "KERNEL_DISTRIBUTED_MIN_VERTICES", 0)
+    land as zero degree / zero inverse in the task-written files and drive
+    the same teleport mass on the slice-store executor as in memory."""
+    from metagraph_spark.operators import supersteps as S
     edges = [(0, 1), (1, 2), (3, 2)]  # 2 is dangling; node 4 isolated
     nodes = spark.createDataFrame([(i,) for i in range(5)], "id long")
     from metagraph_spark.graph import build as gbuild
@@ -258,8 +183,8 @@ def test_scale_layout_dangling_and_isolates(spark, tmp_path, monkeypatch):
     sd = str(tmp_path / "blocks2")
     eb = build_edge_blocks(g, num_blocks=3, spill_dir=sd)
     assert eb.n == 5 and eb.n_dangling == 2  # nodes 2 and 4
-    a = {r["id"]: r["rank"] for r in
-         pagerank_kernel(eb, fixed_iterations=6).collect()}
+    a = {r["id"]: r["rank"] for r in S.run_supersteps(
+        S.PageRank(fixed=6), eb, S.SliceStore()).collect()}
     mem = build_edge_blocks(g, num_blocks=3)
     b = {r["id"]: r["rank"] for r in
          pagerank_kernel(mem, fixed_iterations=6).collect()}
@@ -286,13 +211,14 @@ def test_kernel_slice_store_resume(spark, tmp_path, monkeypatch):
     eb = build_edge_blocks(g, num_blocks=2, spill_dir=str(tmp_path / "blocks"))
     d = str(tmp_path / "store")
 
-    # "crashed" run: 3 committed iterations, files left behind
+    # "crashed" run: 3 committed iterations, files left behind (vector k
+    # is the state after k supersteps)
     pagerank_kernel(eb, fixed_iterations=3, slice_store=LocalSliceStore(d))
     probe = LocalSliceStore(d)
-    assert probe.latest_complete() == 2
+    assert probe.latest_complete() == 3
     # a half-written vector (preallocated, never committed) must not count
-    probe.create_vector(3, eb.n)
-    assert probe.latest_complete() == 2
+    probe.create_vector(4, eb.n)
+    assert probe.latest_complete() == 3
 
     m: list = []
     resumed = {r["id"]: r["rank"] for r in pagerank_kernel(
@@ -326,7 +252,7 @@ def test_object_slice_store_resume(spark, tmp_path, monkeypatch):
     eb = build_edge_blocks(g, num_blocks=2, spill_dir=str(tmp_path / "blocks"))
     d = str(tmp_path / "bucket")
     pagerank_kernel(eb, fixed_iterations=3, slice_store=ObjectSliceStore(d))
-    assert ObjectSliceStore(d).latest_complete() == 2
+    assert ObjectSliceStore(d).latest_complete() == 3
     m: list = []
     resumed = {r["id"]: r["rank"] for r in pagerank_kernel(
         eb, fixed_iterations=6, slice_store=ObjectSliceStore(d),
@@ -337,3 +263,24 @@ def test_object_slice_store_resume(spark, tmp_path, monkeypatch):
         slice_store=ObjectSliceStore(str(tmp_path / "b2"))).collect()}
     assert resumed == full
     eb.unpersist()
+
+
+def test_load_edge_blocks_refuses_legacy_layouts(spark, tmp_path):
+    """Layout directories without meta.json, or with degrees but no
+    inv_deg.npy (older layout versions), are refused with a clear error."""
+    import json
+
+    import numpy as np
+
+    from metagraph_spark.operators.kernel import load_edge_blocks
+
+    d = tmp_path / "old"
+    d.mkdir()
+    (d / "manifest.json").write_text(json.dumps([]))
+    with pytest.raises(ValueError, match="rebuild"):
+        load_edge_blocks(spark, str(d))
+    (d / "meta.json").write_text(
+        json.dumps({"n": 0, "n_dangling": 0, "has_weights": False}))
+    np.save(d / "out_deg.npy", np.zeros(0))
+    with pytest.raises(ValueError, match="inv_deg"):
+        load_edge_blocks(spark, str(d))

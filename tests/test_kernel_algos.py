@@ -87,9 +87,8 @@ def test_katz_kernel_file_backed_weighted(spark, tmp_path):
 
 
 def test_katz_kernel_spill_dir_converged_golden(spark, tmp_path):
-    """katz_centrality(kernel_spill_dir=...) routes through the distributed
-    slice-store loop (vector never on the driver) and still hits the
-    reference golden values at convergence."""
+    """katz_centrality(kernel_spill_dir=...) builds the file-backed layout
+    and still hits the reference golden values at convergence."""
     g = build(df_from_edges(spark, KATZ_GOLDEN_EDGES), is_directed=True)
     got = _map(
         katz_centrality(
@@ -216,82 +215,6 @@ def test_cc_strategy_routing(spark):
         )
 
 
-@pytest.mark.slow
-def test_cc_distributed_loop_parity(spark, tmp_path):
-    """File-backed blocks route to the slice-store CC loop (labels never
-    on the driver, one pointer-doubling job per round) — exact labels on a
-    multi-component graph, a long chain, and the fixed-round oracle path."""
-    edges = _random_edges(60, 150, seed=29, weighted=False) + [(70, 71)]
-    g = build(df_from_edges(spark, edges, weighted=False), is_directed=True)
-    want = _map(connected_components(g), "label")
-    got = _map(
-        cc_kernel(
-            g, spill_dir=str(tmp_path / "dcc")
-        ),
-        "label",
-    )
-    assert want == got
-    chain = [(i, i + 1) for i in range(60)]
-    gc = build(df_from_edges(spark, chain, weighted=False), is_directed=False)
-    got_c = _map(
-        cc_kernel(
-            gc, spill_dir=str(tmp_path / "dchain"),
-            max_rounds=20,
-        ),
-        "label",
-    )
-    assert set(got_c.values()) == {0}
-    for k in (1, 3):
-        want_f = _map(connected_components(g, fixed_rounds=k), "label")
-        got_f = _map(
-            cc_kernel(
-                g, spill_dir=str(tmp_path / f"dfix{k}"),
-                fixed_rounds=k,
-            ),
-            "label",
-        )
-        assert want_f == got_f, f"fixed_rounds={k}"
-
-
-def test_lpa_distributed_loop_parity(spark, tmp_path):
-    """File-backed blocks route to the slice-store LPA loop — exact labels
-    vs the join path on converged and fixed-round runs."""
-    edges = _random_edges(40, 110, seed=31, weighted=False)
-    g = build(df_from_edges(spark, edges, weighted=False), is_directed=False)
-    want = _map(label_propagation_community(g, max_rounds=30), "label")
-    got = _map(
-        lpa_kernel(
-            g, max_rounds=30, spill_dir=str(tmp_path / "dlpa"),
-        ),
-        "label",
-    )
-    assert want == got
-    want_f = _map(label_propagation_community(g, fixed_rounds=2), "label")
-    got_f = _map(
-        lpa_kernel(
-            g, fixed_rounds=2, spill_dir=str(tmp_path / "dlpaf"),
-        ),
-        "label",
-    )
-    assert want_f == got_f
-
-
-def test_cc_lpa_kernel_file_backed_parity(spark, tmp_path):
-    """spill_dir (file-backed blocks + mmap label feed) produces exactly
-    the in-memory kernel's labels for both CC and LPA."""
-    edges = _random_edges(40, 120, seed=17, weighted=False)
-    g = build(df_from_edges(spark, edges, weighted=False), is_directed=True)
-    cc_mem = _map(cc_kernel(g), "label")
-    cc_file = _map(cc_kernel(g, spill_dir=str(tmp_path / "ccb")), "label")
-    assert cc_mem == cc_file
-    lpa_mem = _map(lpa_kernel(g, fixed_rounds=3), "label")
-    lpa_file = _map(
-        lpa_kernel(g, fixed_rounds=3, spill_dir=str(tmp_path / "lpab")),
-        "label",
-    )
-    assert lpa_mem == lpa_file
-
-
 def test_lpa_kernel_matches_join(spark):
     edges = _random_edges(40, 150, seed=13, weighted=False)
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=False)
@@ -399,15 +322,10 @@ def test_object_slice_store_runs_all_distributed_loops(spark, tmp_path):
 
 
 def test_shared_label_blocks_feed_cc_and_lpa(spark, tmp_path):
-    """ONE label_blocks layout (canonical symmetrized, no baked
-    self-votes) feeds both cc_kernel and lpa_kernel with exact join-path
-    parity — file-backed and in-memory — and the legacy baked
-    lpa_vote_blocks layout still agrees (self_votes_baked gates the
-    synthetic suffix, so votes are never doubled)."""
-    from metagraph_spark.operators.kernel_algos import (
-        label_blocks,
-        lpa_vote_blocks,
-    )
+    """ONE label_blocks layout (canonical symmetrized, self-votes applied
+    at read time) feeds both cc_kernel and lpa_kernel with exact join-path
+    parity — file-backed and in-memory — and survives a reopen."""
+    from metagraph_spark.operators.kernel_algos import label_blocks
 
     # include duplicate input edges: CC ignores multiplicity, LPA must
     # (the canonical layout dedups them)
@@ -423,21 +341,14 @@ def test_shared_label_blocks_feed_cc_and_lpa(spark, tmp_path):
         ("mem", label_blocks(g)),
         ("file", label_blocks(g, spill_dir=str(tmp_path / "shared"))),
     ):
-        assert shared.self_votes_baked is False
         got_cc = _map(cc_kernel(shared), "label")
         got_lpa = _map(lpa_kernel(shared, fixed_rounds=3), "label")
         assert want_cc == got_cc, name
         assert want_lpa == got_lpa, name
         shared.unpersist()
-    baked = lpa_vote_blocks(g, spill_dir=str(tmp_path / "baked"))
-    assert baked.self_votes_baked is True
-    assert want_lpa == _map(lpa_kernel(baked, fixed_rounds=3), "label")
-    baked.unpersist()
-    # baked flag round-trips through the on-disk metadata
     from metagraph_spark.operators.kernel import load_edge_blocks
 
-    reopened = load_edge_blocks(spark, str(tmp_path / "baked"))
-    assert reopened.self_votes_baked is True
+    reopened = load_edge_blocks(spark, str(tmp_path / "shared"))
     assert want_lpa == _map(lpa_kernel(reopened, fixed_rounds=3), "label")
     reopened.unpersist()
 
