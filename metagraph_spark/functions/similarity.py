@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from metagraph_spark import routing
+
 
 def _norm(col):
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
@@ -41,12 +43,6 @@ def with_unit_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.filter(n > 0).withColumn(
         "_unit", F.transform(F.col(vec_col), lambda x: x / n)
     )
-
-
-# Above this query count the vectorized scorer's driver-collected query
-# matrix stops being reasonable and cosine_topk_bruteforce falls back to
-# the crossJoin + JVM-expression plan (which streams both sides).
-BRUTEFORCE_VECTORIZED_MAX_QUERIES = 20_000
 
 
 def cosine_topk_bruteforce(
@@ -69,7 +65,7 @@ def cosine_topk_bruteforce(
     — global top-k is a union of batch top-ks, so the window at the end
     sorts thousands of candidate rows instead of |corpus|·|queries|.
     Falls back to the crossJoin plan past
-    ``BRUTEFORCE_VECTORIZED_MAX_QUERIES``."""
+    ``routing.BRUTEFORCE_VECTORIZED_MAX_QUERIES``."""
     c = with_unit_norm(corpus, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("_unit").alias("_cu")
     )
@@ -88,8 +84,9 @@ def cosine_topk_bruteforce(
         c.schema["neighbor_id"].dataType, T.LongType
     ) and isinstance(q.schema["query_id"].dataType, T.LongType)
     if int_ids:
-        q_head = q.limit(BRUTEFORCE_VECTORIZED_MAX_QUERIES + 1).collect()
-        if len(q_head) <= BRUTEFORCE_VECTORIZED_MAX_QUERIES:
+        cap = routing.BRUTEFORCE_VECTORIZED_MAX_QUERIES
+        q_head = q.limit(cap + 1).collect()
+        if len(q_head) <= cap:
             q_rows = q_head
     if q_rows is not None and len(q_rows) > 0:
         spark = corpus.sparkSession

@@ -52,19 +52,11 @@ from typing import Optional
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
+from metagraph_spark.collect import collect_edges, positions, sort_by
 from metagraph_spark.exceptions import ConvergenceError, GraphPropertyError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
 from metagraph_spark.state import LineageManager, truncate_lineage
-
-# full closeness/betweenness are all-pairs; refuse silent O(V^2)/driver blowup
-CLOSENESS_ALL_NODES_LIMIT = 100_000
-BETWEENNESS_MAX_EDGES = 50_000_000
-
-# Above this vertex count the fixed-superstep katz loop stops broadcasting
-# the |V|-row state into the gather join (guide §3.1 sizing: ~16 B/row plus
-# framing — ~0.5 GB at the cap, built once per superstep) and falls back to
-# the shuffled superstep plan. Scale-adaptive, not core-count-dependent.
-KATZ_BROADCAST_MAX_VERTICES = 16_000_000
 
 
 def _weighted_edges(graph: Graph) -> DataFrame:
@@ -82,7 +74,6 @@ def katz_centrality(
     tolerance: float = 1e-05,
     fixed_iterations: int | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
     kernel_spill_dir: str | None = None,
 ) -> DataFrame:
     """Returns ``(id, katz)``. One Spark job per superstep: the gather join
@@ -92,63 +83,45 @@ def katz_centrality(
     ``fixed_iterations`` runs exactly k supersteps with no convergence test
     (oracle parity — the DuckDB side unrolls the same k updates).
 
-    ``strategy``: ``"auto"`` (default — kernel when the vertex count fits
-    or a spill dir is given, join otherwise), ``"join"`` (iterative
-    DataFrame joins — scales to any V), or ``"kernel"`` (weighted
-    CSR/Arrow blocks, zero-shuffle supersteps — see
-    ``operators/kernel_algos.py:katz_kernel``; dense driver vector capped
-    at ``pagerank.KERNEL_MAX_VERTICES`` unless ``kernel_spill_dir`` routes
-    to the file-backed slice-store loop whose vectors never touch the
-    driver). Identical update rule, asserted by shared tests."""
+    ``strategy``: ``"auto"`` (default — ``routing.use_kernel``: kernel
+    when the graph fits the kernel caps or a spill dir is given, join
+    otherwise), ``"join"`` (iterative DataFrame joins — scales to any V),
+    or ``"kernel"`` (weighted CSR/Arrow blocks, zero-shuffle supersteps —
+    see ``operators/kernel_algos.py:katz_kernel``; ``kernel_spill_dir``
+    routes to the file-backed slice-store loop whose vectors never touch
+    the driver). Identical update rule, asserted by shared tests."""
     if strategy not in ("join", "kernel", "auto"):
         raise ValueError(f"unknown katz strategy {strategy!r}")
-    if strategy != "join":
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
+    if routing.use_kernel(strategy, graph, kernel_spill_dir):
+        from metagraph_spark.operators.kernel import build_edge_blocks
+        from metagraph_spark.operators.kernel_algos import katz_kernel
 
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
-        )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
-
-        if (
-            strategy == "kernel"
-            or kernel_spill_dir is not None
-            or (
-                graph.num_nodes() <= cap
-                and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
+        target, built = graph, None
+        if kernel_spill_dir is not None:
+            built = build_edge_blocks(
+                graph, spill_dir=kernel_spill_dir,
+                with_weights=graph.is_weighted,
             )
-        ):
-            from metagraph_spark.operators.kernel import build_edge_blocks
-            from metagraph_spark.operators.kernel_algos import katz_kernel
-
-            target, built = graph, None
-            if kernel_spill_dir is not None:
-                built = build_edge_blocks(
-                    graph, spill_dir=kernel_spill_dir,
-                    with_weights=graph.is_weighted,
-                )
-                target = built
-            try:
-                return katz_kernel(
-                    target,
-                    attenuation_factor=attenuation_factor,
-                    immediate_neighbor_weight=immediate_neighbor_weight,
-                    maxiter=maxiter,
-                    tolerance=tolerance,
-                    fixed_iterations=fixed_iterations,
-                )
-            finally:
-                if built is not None:
-                    built.unpersist()
+            target = built
+        try:
+            return katz_kernel(
+                target,
+                attenuation_factor=attenuation_factor,
+                immediate_neighbor_weight=immediate_neighbor_weight,
+                maxiter=maxiter,
+                tolerance=tolerance,
+                fixed_iterations=fixed_iterations,
+            )
+        finally:
+            if built is not None:
+                built.unpersist()
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_nodes()
     nodes = graph.node_ids()
     alpha, beta = attenuation_factor, immediate_neighbor_weight
     lineage = LineageManager()
-    if fixed_iterations is not None and n <= KATZ_BROADCAST_MAX_VERTICES:
+    if fixed_iterations is not None and routing.broadcast_state(n):
         # Fixed-superstep fast path (guide §2.4/§3.1): the edge cache is
         # keyed by DST and the |V|-row state BROADCAST into the gather
         # join, so the per-superstep aggregation is partition-local and
@@ -287,7 +260,6 @@ def eigenvector_centrality(
     tolerance: float = 1e-05,
     fixed_iterations: int | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
 ) -> DataFrame:
     """Returns ``(id, eigenvector)``.
 
@@ -299,33 +271,18 @@ def eigenvector_centrality(
 
     ``strategy="kernel"``/``"auto"`` routes to the CSR-block kernel
     (``kernel_algos.py:eigenvector_kernel``, same superstep schedule;
-    ``"auto"`` capped at ``pagerank.KERNEL_MAX_VERTICES``)."""
+    ``"auto"`` decides by ``routing.use_kernel``)."""
     if strategy not in ("join", "kernel", "auto"):
         raise ValueError(f"unknown eigenvector strategy {strategy!r}")
-    if strategy != "join":
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
+    if routing.use_kernel(strategy, graph):
+        from metagraph_spark.operators.kernel_algos import eigenvector_kernel
 
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
+        return eigenvector_kernel(
+            graph,
+            maxiter=maxiter,
+            tolerance=tolerance,
+            fixed_iterations=fixed_iterations,
         )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
-
-        if strategy == "kernel" or (
-            graph.num_nodes() <= cap
-            and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-        ):
-            from metagraph_spark.operators.kernel_algos import (
-                eigenvector_kernel,
-            )
-
-            return eigenvector_kernel(
-                graph,
-                maxiter=maxiter,
-                tolerance=tolerance,
-                fixed_iterations=fixed_iterations,
-            )
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = _weighted_edges(graph).repartition(n_part, SRC).persist()
@@ -418,7 +375,6 @@ def hits_centrality(
     normalize: bool = True,
     fixed_iterations: int | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns ``(hubs, authorities)`` NodeMaps ``(id, hubs)/(id, authority)``.
 
@@ -429,35 +385,22 @@ def hits_centrality(
     column (both sides' norms known by then — no separate stats jobs).
 
     ``strategy="kernel"``/``"auto"`` routes to the two-layout CSR kernel
-    (``kernel_algos.py:hits_kernel``; ``"auto"`` capped at
-    ``pagerank.KERNEL_MAX_VERTICES``)."""
+    (``kernel_algos.py:hits_kernel``; ``"auto"`` decides by
+    ``routing.use_kernel``)."""
     if strategy not in ("join", "kernel", "auto"):
         raise ValueError(f"unknown hits strategy {strategy!r}")
     if not graph.is_directed:
         raise GraphPropertyError("hits requires a directed graph")
-    if strategy != "join":
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
+    if routing.use_kernel(strategy, graph):
+        from metagraph_spark.operators.kernel_algos import hits_kernel
 
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
+        return hits_kernel(
+            graph,
+            maxiter=maxiter,
+            tolerance=tolerance,
+            normalize=normalize,
+            fixed_iterations=fixed_iterations,
         )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
-
-        if strategy == "kernel" or (
-            graph.num_nodes() <= cap
-            and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-        ):
-            from metagraph_spark.operators.kernel_algos import hits_kernel
-
-            return hits_kernel(
-                graph,
-                maxiter=maxiter,
-                tolerance=tolerance,
-                normalize=normalize,
-                fixed_iterations=fixed_iterations,
-            )
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = _weighted_edges(graph).repartition(n_part, SRC).persist()
@@ -627,12 +570,11 @@ def closeness_centrality(
     if graph.has_negative_weights():
         raise GraphPropertyError("closeness requires non-negative weights")
     n = graph.num_nodes()
-    if nodes is None and n > CLOSENESS_ALL_NODES_LIMIT:
-        raise GraphPropertyError(
-            f"closeness over all {n} nodes needs O(V^2) relaxation state; "
-            f"pass an explicit NodeSet subset (limit "
-            f"{CLOSENESS_ALL_NODES_LIMIT})"
-        )
+    if nodes is None:
+        routing.refuse_above(
+            "closeness over all nodes", "nodes", n,
+            routing.CLOSENESS_ALL_NODES_LIMIT,
+            " — O(V^2) relaxation state; pass an explicit NodeSet subset")
     targets = nodes.select(ID) if nodes is not None else graph.node_ids()
     # distances of paths u -> v for target v: relax on REVERSED edges from v
     dists = _multi_source_distances(graph, targets, reverse=True, max_rounds=max_rounds)
@@ -1142,22 +1084,24 @@ def betweenness_centrality(
     nodes: Optional[DataFrame] = None,
     normalize: bool = False,
     sources_per_batch: int = 16,
-    max_edges: int = BETWEENNESS_MAX_EDGES,
+    max_edges: int = routing.BETWEENNESS_MAX_EDGES,
     strategy: str = "auto",
 ) -> DataFrame:
     """Brandes betweenness, parallelized over sources.
 
-    The positional CSR is assembled from ONE Arrow pass (``toArrow`` —
-    columnar transfer, no Row objects) into four numpy arrays which are
-    broadcast; sources are distributed ``sources_per_batch`` per Arrow batch
-    through ``applyInPandas``; each task runs weighted Brandes (Dijkstra +
-    dependency accumulation on the broadcast CSR) for its sources and emits
-    partial (id, score) rows which a final groupBy sums. Matches nx
+    The positional CSR is assembled from the one driver collect
+    (``collect.collect_edges`` — one Arrow pass, no Row objects) into
+    numpy arrays which are broadcast; sources are distributed
+    ``sources_per_batch`` per Arrow batch through ``applyInPandas``; each
+    task runs weighted Brandes (Dijkstra + dependency accumulation on the
+    broadcast CSR) for its sources and emits partial (id, score) rows
+    which a final groupBy sums. Matches nx
     ``betweenness_centrality_subset`` with sources == targets == nodes
     (``plugins/networkx/algorithms.py:158-173``).
 
     ``strategy``: ``"kernel"`` is the broadcast-CSR path above (weighted,
-    refuses graphs beyond ``max_edges``); ``"distributed"`` is
+    refuses graphs beyond ``max_edges`` edge rows after symmetrization,
+    ``routing.driver_edge_rows``); ``"distributed"`` is
     ``_betweenness_distributed`` (batched multi-source BFS) for
     unweighted graphs and ``_betweenness_distributed_weighted`` (implicit
     shortest-path DAG over Bellman-Ford distances, level-layered
@@ -1170,57 +1114,28 @@ def betweenness_centrality(
 
     if strategy not in ("auto", "kernel", "distributed"):
         raise ValueError(f"unknown betweenness strategy {strategy!r}")
-    if strategy == "distributed":
+    m = routing.driver_edge_rows(graph, "sym")
+    if strategy == "distributed" or (strategy == "auto" and m > max_edges):
         if graph.is_weighted:
             return _betweenness_distributed_weighted(graph, nodes, normalize)
         return _betweenness_distributed(graph, nodes, normalize)
     spark = graph.edges.sparkSession
-    wedges = _weighted_edges(graph)
-    m = wedges.count()
-    if m > max_edges:
-        if strategy == "auto":
-            if graph.is_weighted:
-                return _betweenness_distributed_weighted(
-                    graph, nodes, normalize
-                )
-            return _betweenness_distributed(graph, nodes, normalize)
-        raise GraphPropertyError(
-            f"betweenness needs the adjacency broadcast per task; graph has "
-            f"{m} (symmetrized) edges > max_edges={max_edges}. Exact "
-            f"betweenness is all-pairs — sample sources at this scale "
-            f"(strategy='auto' takes the distributed BFS/Bellman-Ford "
-            f"strategies automatically)."
-        )
-    # single Arrow pass each: columnar to numpy, no Python Row objects
-    nodes_tbl = graph.node_ids().toArrow()
-    node_arr = np.sort(nodes_tbl.column(ID).to_numpy())
-    nv = int(node_arr.shape[0])
-    e_tbl = wedges.toArrow()
-    src_pos = np.searchsorted(node_arr, e_tbl.column(SRC).to_numpy())
-    dst_pos = np.searchsorted(node_arr, e_tbl.column(DST).to_numpy())
-    w_arr = e_tbl.column(WEIGHT).to_numpy().astype(np.float64)
-    order = np.argsort(src_pos, kind="stable")
-    indices = dst_pos[order]
-    weights = w_arr[order]
-    indptr = np.zeros(nv + 1, dtype=np.int64)
-    np.cumsum(np.bincount(src_pos, minlength=nv), out=indptr[1:])
+    routing.refuse_above(
+        "betweenness kernel", "edge rows", m, max_edges,
+        " — it broadcasts the adjacency to every task; raise max_edges, "
+        "sample sources, or use strategy='auto' (distributed above the cap)")
+    e = collect_edges(graph, "sym", weighted=True)
+    node_arr, nv = e.ids, len(e.ids)
+    order, indptr = sort_by(e.src, nv)
+    indices = e.dst[order]
+    weights = (e.w if e.w is not None else np.ones(len(order)))[order]
 
     if nodes is not None:
         # unique: a duplicated source id would run (and sum) its Brandes
         # pass twice, silently inflating every reachable score
         src_ids = np.unique(nodes.select(ID).toArrow().column(ID).to_numpy())
-        if nv == 0 and len(src_ids):
-            raise GraphPropertyError(
-                f"betweenness sources not in graph: {src_ids[:10].tolist()}"
-            )
-        srcs = np.searchsorted(node_arr, src_ids)
-        # searchsorted on a missing id silently returns the insertion
-        # position (or nv, past the end) — validate membership explicitly.
-        bad = (srcs >= nv) | (node_arr[np.minimum(srcs, nv - 1)] != src_ids)
-        if bad.any():
-            raise GraphPropertyError(
-                f"betweenness sources not in graph: {src_ids[bad][:10].tolist()}"
-            )
+        srcs = positions(node_arr, src_ids, lambda missing: GraphPropertyError(
+            f"betweenness sources not in graph: {missing[:10].tolist()}"))
         tmask = np.zeros(nv, dtype=bool)
         tmask[srcs] = True
     else:

@@ -34,17 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
 from metagraph_spark.exceptions import ConvergenceError
 from metagraph_spark.graph import DST, ID, SRC, Graph
 from metagraph_spark.state import CheckpointManager, truncate_lineage
-
-# Converged-join-path routing threshold: below this edge count the
-# hash-min + pointer-jump loop (ONE |E|-row join + groupBy per round) beats
-# two-phase large-star/small-star, whose ~4 shuffles + 2 distincts per
-# round only pay off once the shrinking edge set dominates (measured:
-# two-phase cost transcript_cc 4.1->7.3s / copurchase_cc 3.4->5.5s at
-# sub-1M edges while winning 4x at 100M edges — BENCH r3 vs r4).
-TWO_PHASE_MIN_EDGES = 5_000_000
 
 
 def _min_label_fixpoint(
@@ -172,17 +165,12 @@ def _two_phase_cc(
     multiset, which min() and the ==0 observes are insensitive to."""
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Narrower types (guide §2.3): when every edge endpoint fits int32
-    # (checked exactly, one scan-aggregate), the star rounds run on int
-    # pairs — every per-round exchange and dedup halves its bytes. Node
-    # ids outside the edge set (isolates) never enter the loop: they take
-    # their own (long) id in the final label join, so only the edge range
-    # gates the narrowing; labels are min-ids and cast back exactly.
-    lim = 2**31 - 1
-    row = edges.agg(
-        F.min(SRC), F.min(DST), F.max(SRC), F.max(DST)
-    ).collect()[0]
-    vals = [v for v in row if v is not None]
-    narrow = bool(vals) and min(vals) >= -lim - 1 and max(vals) <= lim
+    # (``routing.fits_int32``, one scan-aggregate), the star rounds run on
+    # int pairs — every per-round exchange and dedup halves its bytes.
+    # Node ids outside the edge set (isolates) never enter the loop: they
+    # take their own (long) id in the final label join, so only the edge
+    # range gates the narrowing; labels are min-ids and cast back exactly.
+    narrow = routing.fits_int32(edges)
     # round 1 consumes E as a MULTISET (min-aggregation and the ==0
     # observes are multiplicity-insensitive, and the large-star output is
     # deduped partition-local inside the round), so the initial
@@ -279,7 +267,6 @@ def connected_components(
     fixed_rounds: int | None = None,
     checkpointer: CheckpointManager | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
     kernel_spill_dir: str | None = None,
 ) -> DataFrame:
     """Return NodeMap ``(id: long, label: long)``; label = min node id in the
@@ -287,21 +274,22 @@ def connected_components(
     (matches nx ``connected_components`` requiring undirected,
     ``plugins/networkx/algorithms.py:61-67``).
 
-    Physical strategy: the converged join path is SIZE-ROUTED — above
-    ``TWO_PHASE_MIN_EDGES`` it runs alternating large-star / small-star
-    rounds (:func:`_two_phase_cc` — O(log V) rounds on a SHRINKING edge
-    set); below it the hash-min + pointer-jump loop wins (one |E|-row
-    join per round vs two-phase's ~4 shuffles + 2 distincts).
+    Physical strategy: the converged join path is SIZE-ROUTED — from
+    ``routing.TWO_PHASE_MIN_EDGES`` edges up it runs alternating
+    large-star / small-star rounds (:func:`_two_phase_cc` — O(log V)
+    rounds on a SHRINKING edge set); below it the hash-min + pointer-jump
+    loop wins (one |E|-row join per round vs two-phase's ~4 shuffles + 2
+    distincts).
     ``fixed_rounds`` (the unrolled-SQL oracle contract) and checkpointed
     runs always keep the hash-min label exchange, whose per-round vertex
     state is what the resume protocol snapshots.
 
     ``strategy="kernel"``/``"auto"`` routes to the CSR-block hash-min
     kernel (``operators/kernel_algos.py:cc_kernel`` — segmented-min
-    gather, pointer-jumped dense labels; EXACTLY the same labels, capped
-    at ``pagerank.KERNEL_MAX_VERTICES`` for ``"auto"``). The kernel keeps
-    no durable per-round state, so it is never combined with a
-    checkpointer (explicit ``"kernel"`` + checkpointer raises)."""
+    gather, pointer-jumped dense labels; EXACTLY the same labels;
+    ``"auto"`` decides by ``routing.use_kernel``). The kernel keeps no
+    durable per-round state, so it is never combined with a checkpointer
+    (explicit ``"kernel"`` + checkpointer raises)."""
     if strategy not in ("join", "kernel", "auto"):
         raise ValueError(f"unknown connected_components strategy {strategy!r}")
     if strategy == "kernel" and checkpointer is not None:
@@ -309,37 +297,22 @@ def connected_components(
             "strategy='kernel' keeps no durable per-round state and cannot "
             "honor a checkpointer; use strategy='join' or 'auto'"
         )
-    if strategy != "join" and checkpointer is None:
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
+    if routing.use_kernel(
+        strategy, graph, kernel_spill_dir, checkpointer is not None
+    ):
+        from metagraph_spark.operators.kernel_algos import cc_kernel
 
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
+        return cc_kernel(
+            graph,
+            max_rounds=max_rounds,
+            fixed_rounds=fixed_rounds,
+            spill_dir=kernel_spill_dir,
         )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
-
-        if (
-            strategy == "kernel"
-            or kernel_spill_dir is not None
-            or (
-                graph.num_nodes() <= cap
-                and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-            )
-        ):
-            from metagraph_spark.operators.kernel_algos import cc_kernel
-
-            return cc_kernel(
-                graph,
-                max_rounds=max_rounds,
-                fixed_rounds=fixed_rounds,
-                spill_dir=kernel_spill_dir,
-            )
     spark = graph.edges.sparkSession
     if (
         fixed_rounds is None
         and checkpointer is None
-        and graph.num_edges() >= TWO_PHASE_MIN_EDGES
+        and routing.two_phase_cc(graph.num_edges())
     ):
         # size-routed: two-phase only where its shrinking edge set wins;
         # smaller converged graphs fall through to hash-min + pointer jump

@@ -42,27 +42,14 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
+from metagraph_spark.collect import collect_edges, sort_by
 from metagraph_spark.exceptions import GraphPropertyError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
 from metagraph_spark.operators.subgraph import _P31, mix31
 from metagraph_spark.state import truncate_lineage
 
 _TWO_PI = 2.0 * math.pi
-
-# |V|·r values above which the superstep state is no longer broadcast
-# into the series joins (~8 B/value plus framing → ~200 MB at the cap)
-HOPE_BROADCAST_MAX_VALUES = 25_000_000
-
-# Below this edge count (and within the |V|·r broadcast budget above) the
-# whole randomized-SVD pipeline runs on the DRIVER over once-collected
-# Arrow arrays: the (2*power_iters+2)*k_terms superstep chain is
-# job-floor-bound at small scale (each superstep a near-empty single-stage
-# job), so two collects + numpy segmented sums replace ~40 Spark jobs.
-# Same guarded-driver-kernel envelope as operators/kernel.py
-# KERNEL_DRIVER_LOOP_MAX_EDGES, counted the same way: edge rows the driver
-# holds after symmetrization (``supersteps.driver_edge_rows``); the
-# distributed path is untouched above the caps.
-HOPE_DRIVER_MAX_EDGES = 5_000_000
 
 
 def _gauss_expr(id_col, col_idx: int, seed: int):
@@ -155,9 +142,7 @@ def _gauss_np(ids: np.ndarray, col_idx: int, seed: int) -> np.ndarray:
 
 
 def _hope_driver(
-    spark,
-    edges: DataFrame,
-    nodes: DataFrame | None,
+    graph: Graph,
     half: int,
     r: int,
     beta: float,
@@ -165,7 +150,9 @@ def _hope_driver(
     power_iters: int,
     seed: int,
 ) -> DataFrame:
-    """Driver kernel: the identical pipeline over one collected edge list.
+    """Driver kernel: the identical pipeline over the one driver collect
+    (``collect.collect_edges``, mode ``"sym"``: directed edges as-is,
+    undirected ones symmetrized; unit weights when unweighted).
 
     The node set is the collected endpoints ∪ the explicit node set (same
     universe as ``graph.node_ids()``, no distinct job); omega comes from
@@ -181,24 +168,12 @@ def _hope_driver(
     the round-6 union-sum series merge documented."""
     import pandas as pd
 
-    epdf = edges.toPandas()
-    e_src = epdf[SRC].to_numpy(dtype=np.int64, na_value=0)
-    e_dst = epdf[DST].to_numpy(dtype=np.int64, na_value=0)
-    id_parts = [e_src, e_dst]
-    if nodes is not None:
-        id_parts.append(
-            nodes.select(ID).toPandas()[ID].to_numpy(dtype=np.int64, na_value=0)
-        )
-    ids_sorted = np.unique(np.concatenate(id_parts)) if id_parts else np.array(
-        [], dtype=np.int64
-    )
+    e = collect_edges(graph, "sym", weighted=True)
+    ids_sorted, src, dst = e.ids, e.src, e.dst
+    w = e.w if e.w is not None else np.ones(len(src))
     omega = np.column_stack(
         [_gauss_np(ids_sorted, j, seed) for j in range(r)]
     ) if len(ids_sorted) else np.zeros((0, r))
-    src = np.searchsorted(ids_sorted, e_src)
-    dst = np.searchsorted(ids_sorted, e_dst)
-    w = epdf[WEIGHT].to_numpy().astype(float)
-
     n = len(ids_sorted)
 
     def _make_mul(group_idx, gather_idx):
@@ -207,7 +182,7 @@ def _hope_driver(
         # then each column is one weighted bincount — measured 2.2x over
         # the 2D gather + add.reduceat shape (no |E| x r temporary), and
         # deterministic (fixed edge order per pass)
-        o = np.argsort(group_idx, kind="stable")
+        o, _ = sort_by(group_idx, n)
         g, a, ww = group_idx[o], gather_idx[o], w[o]
 
         def mul(T):
@@ -248,7 +223,7 @@ def _hope_driver(
     # without spark.sql.execution.arrow.pyspark.enabled) rejects
     # numpy.float64 elements inside array<double>
     out_pdf = pd.DataFrame({ID: ids_sorted, "emb": emb.tolist()})
-    return spark.createDataFrame(
+    return graph.edges.sparkSession.createDataFrame(
         out_pdf, schema=f"{ID} long, emb array<double>"
     )
 
@@ -299,7 +274,6 @@ def hope_katz_train(
     power_iters: int = 2,
     oversample: int = 4,
     seed: int = 42,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Train HOPE-katz embeddings; returns ``(id, emb array<double>)`` with
     ``len(emb) == 2 * (embedding_size // 2)`` — source half then target
@@ -320,6 +294,30 @@ def hope_katz_train(
         raise GraphPropertyError("beta must be in (0, 1)")
     half = embedding_size // 2
     r = half + oversample
+    # size-routed driver kernel (round 6): within the driver cap and the
+    # |V|·r broadcast budget the superstep chain is job-floor-bound, not
+    # compute-bound — run the identical pipeline on the driver (each
+    # superstep a near-empty single-stage job otherwise: one collect +
+    # numpy segmented sums replace ~(2q+2)*k_terms Spark jobs)
+    bcast = routing.hope_broadcast(graph.num_nodes(), r)
+    if bcast and routing.fits_driver(routing.driver_edge_rows(graph, "sym")):
+        return _hope_driver(graph, half, r, beta, k_terms, power_iters, seed)
+    return _hope_distributed(graph, half, r, beta, k_terms, power_iters,
+                             seed, bcast)
+
+
+def _hope_distributed(
+    graph: Graph,
+    half: int,
+    r: int,
+    beta: float,
+    k_terms: int,
+    power_iters: int,
+    seed: int,
+    bcast: bool,
+) -> DataFrame:
+    """The distributed randomized-SVD plan (module docstring); ``bcast``
+    broadcasts the |V|·r superstep state into the series joins."""
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = graph.symmetrized() if not graph.is_directed else graph.edges
@@ -327,24 +325,6 @@ def hope_katz_train(
         edges = edges.select(SRC, DST, WEIGHT)
     else:
         edges = edges.select(SRC, DST, F.lit(1.0).alias(WEIGHT))
-    # size-routed driver kernel (round 6): below the edge cap (and within
-    # the |V|·r broadcast budget) the superstep chain is job-floor-bound,
-    # not compute-bound — run the identical pipeline on the driver over
-    # two Arrow collects instead of ~(2q+2)*k_terms Spark jobs. The
-    # ``driver_max_edges`` override (0 disables) exists for tests and for
-    # callers that want the distributed plan regardless.
-    cap = HOPE_DRIVER_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    from metagraph_spark.operators.supersteps import driver_edge_rows
-
-    if (
-        cap
-        and driver_edge_rows(graph, "sym") <= cap
-        and graph.num_nodes() * r <= HOPE_BROADCAST_MAX_VALUES
-    ):
-        return _hope_driver(
-            spark, edges, graph.nodes, half, r, beta, k_terms,
-            power_iters, seed,
-        )
     # two cached layouts: the S pass joins on dst and aggregates by src,
     # the S^T pass the reverse. With a small |V|·r state each pass feeds
     # off the cache keyed by its GROUP column and BROADCASTS the state:
@@ -354,8 +334,6 @@ def hope_katz_train(
     edges_by_dst = edges.repartition(n_part, DST).persist()
     edges_by_src = edges.repartition(n_part, SRC).persist()
     nodes = truncate_lineage(graph.node_ids()).persist()
-    # ~8 B per value plus framing: cap the broadcast at ~200 MB
-    bcast = graph.num_nodes() * r <= HOPE_BROADCAST_MAX_VALUES
     s_edges = edges_by_src if bcast else edges_by_dst
     st_edges = edges_by_dst if bcast else edges_by_src
     if bcast:

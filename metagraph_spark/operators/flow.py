@@ -12,11 +12,12 @@ Reference contracts (abstract defs ``plugins/core/algorithms/flow.py:7-30``):
 
 Physical scope: augmenting-path max-flow is inherently sequential (every
 augmentation depends on the previous residual), so — like betweenness —
-this is a DRIVER KERNEL: one Arrow pass assembles the positional CSR with
-paired residual arcs, Edmonds–Karp (BFS shortest augmenting paths) runs in
-numpy/python on the driver, and only the resulting flow/cut EDGE TABLES go
-back to Spark. An explicit ``max_edges`` guard refuses graphs that do not
-fit this scope instead of OOMing; at 10^12 edges no engine runs exact
+this is a DRIVER KERNEL: the one driver collect assembles the positional
+CSR with paired residual arcs, Edmonds–Karp (BFS shortest augmenting
+paths) runs in numpy/python on the driver, and only the resulting
+flow/cut EDGE TABLES go back to Spark. The
+``routing.SEQUENTIAL_MAX_EDGES`` guard refuses graphs that do not fit
+this scope instead of OOMing; at 10^12 edges no engine runs exact
 max-flow — the reference's own impls are single-threaded scipy/networkx.
 """
 
@@ -26,47 +27,27 @@ from collections import deque
 
 import numpy as np
 
+from metagraph_spark import routing
+from metagraph_spark.collect import collect_edges, position, sort_by
 from metagraph_spark.exceptions import GraphPropertyError
-from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
-
-MAXFLOW_MAX_EDGES = 10_000_000
+from metagraph_spark.graph import DST, SRC, WEIGHT, Graph
 
 
-def _arrow_csr(graph: Graph):
-    """One Arrow pass → (node_arr, src_pos, dst_pos, cap) positional arrays."""
+def _capacities(graph: Graph, op: str):
+    """The one driver collect of the raw weighted edges (positional
+    ``src``/``dst``, capacities ``w``), guarded before anything moves."""
     if not graph.is_weighted:
-        raise GraphPropertyError("max_flow requires an EdgeMap (weights=capacities)")
+        raise GraphPropertyError(f"{op} requires an EdgeMap (weights=capacities)")
     if not graph.is_directed:
-        raise GraphPropertyError("max_flow requires a directed graph")
-    m = graph.num_edges()
-    if m > MAXFLOW_MAX_EDGES:
-        raise GraphPropertyError(
-            f"max_flow is a driver kernel (sequential augmenting paths); "
-            f"graph has {m} edges > max {MAXFLOW_MAX_EDGES}"
-        )
-    nodes_tbl = graph.node_ids().toArrow()
-    node_arr = np.sort(nodes_tbl.column(ID).to_numpy())
-    e_tbl = graph.edges.select(SRC, DST, WEIGHT).toArrow()
-    src_pos = np.searchsorted(node_arr, e_tbl.column(SRC).to_numpy())
-    dst_pos = np.searchsorted(node_arr, e_tbl.column(DST).to_numpy())
-    cap = e_tbl.column(WEIGHT).to_numpy().astype(np.float64)
-    if (cap < 0).any():
-        raise GraphPropertyError("max_flow requires non-negative capacities")
-    return node_arr, src_pos, dst_pos, cap
-
-
-def _resolve_st(node_arr, source_node: int, target_node: int) -> tuple[int, int]:
-    """Map source/target ids to positions, validating membership —
-    np.searchsorted on a missing id would otherwise silently return the
-    insertion position and compute the flow/cut from the wrong node."""
-    n = len(node_arr)
-    s = int(np.searchsorted(node_arr, source_node))
-    t = int(np.searchsorted(node_arr, target_node))
-    if not (0 <= s < n and node_arr[s] == source_node):
-        raise ValueError(f"source node {source_node} not in graph")
-    if not (0 <= t < n and node_arr[t] == target_node):
-        raise ValueError(f"target node {target_node} not in graph")
-    return s, t
+        raise GraphPropertyError(f"{op} requires a directed graph")
+    routing.refuse_above(
+        op, "edge rows", routing.driver_edge_rows(graph, "raw"),
+        routing.SEQUENTIAL_MAX_EDGES,
+        " — a driver kernel (sequential augmenting paths)")
+    e = collect_edges(graph, "raw", weighted=True)
+    if (e.w < 0).any():
+        raise GraphPropertyError(f"{op} requires non-negative capacities")
+    return e
 
 
 def _edmonds_karp(n, src_pos, dst_pos, cap, s, t):
@@ -83,10 +64,7 @@ def _edmonds_karp(n, src_pos, dst_pos, cap, s, t):
     tails = np.empty(2 * m, dtype=np.int64)
     tails[0::2] = src_pos
     tails[1::2] = dst_pos
-    order = np.argsort(tails, kind="stable")
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(np.bincount(tails, minlength=n), out=indptr[1:])
-    arc_of = order  # position j in adjacency -> arc id
+    arc_of, indptr = sort_by(tails, n)  # adjacency position j -> arc id
 
     flow_value = 0.0
     eps = 1e-12
@@ -142,8 +120,9 @@ def max_flow(
     the flow routed on each original edge (zero-flow edges dropped, all
     input nodes kept), matching the nx flow_dict semantics."""
     spark = graph.edges.sparkSession
-    node_arr, src_pos, dst_pos, cap = _arrow_csr(graph)
-    s, t = _resolve_st(node_arr, source_node, target_node)
+    node_arr, src_pos, dst_pos, cap = _capacities(graph, "max_flow")
+    s = position(node_arr, source_node, "source")
+    t = position(node_arr, target_node, "target")
     value, flow, _ = _edmonds_karp(len(node_arr), src_pos, dst_pos, cap, s, t)
     keep = flow > 0
     import pandas as pd
@@ -170,8 +149,9 @@ def min_cut(
     complement (the canonical minimum cut), with their original capacities;
     all input nodes kept. cut_value == max_flow value (duality)."""
     spark = graph.edges.sparkSession
-    node_arr, src_pos, dst_pos, cap = _arrow_csr(graph)
-    s, t = _resolve_st(node_arr, source_node, target_node)
+    node_arr, src_pos, dst_pos, cap = _capacities(graph, "min_cut")
+    s = position(node_arr, source_node, "source")
+    t = position(node_arr, target_node, "target")
     value, _, reach = _edmonds_karp(len(node_arr), src_pos, dst_pos, cap, s, t)
     keep = reach[src_pos] & ~reach[dst_pos]
     import pandas as pd

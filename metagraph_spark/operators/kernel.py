@@ -3,13 +3,9 @@
 The kernels (PageRank here; katz, CC, LPA, eigenvector and HITS in
 ``operators/kernel_algos.py``) are programs on the one superstep engine in
 ``operators/supersteps.py``, which runs them on three executors — driver,
-broadcast and slice store — and routes each call with one rule
-(``supersteps.choose_executor``): below ``KERNEL_DRIVER_LOOP_MAX_EDGES``
-symmetrized edge rows (and ``KERNEL_DRIVER_LOOP_MAX_VERTICES`` vertices)
-the driver executor runs every superstep on the driver over one Arrow
-collect; above it file-backed layouts with at least
-``KERNEL_DISTRIBUTED_MIN_VERTICES`` vertices take the slice store and all
-other layouts the broadcast executor.
+broadcast and slice store — chosen by the one routing rule
+``routing.choose_executor`` (caps and their measurements live in
+``metagraph_spark/routing.py``).
 
 This module owns what the executors read:
 
@@ -46,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
 
 BLOCK_SCHEMA = "block int, dst_lo long, srcs array<int>, dsts array<int>"
@@ -58,34 +55,6 @@ BLOCK_SCHEMA_W = BLOCK_SCHEMA + ", ws array<double>"
 # a scheduler plugin.
 # per-worker cache of slice-store aux vectors, keyed by run_dir
 _VEC_CACHE: dict = {}
-
-# The driver cap of every kernel route. It counts the edge rows the driver
-# holds AFTER symmetrization — for a Graph input the rows its one Arrow
-# collect turns into (``supersteps.driver_edge_rows``), for prebuilt
-# blocks the block rows. At bench scale the per-superstep Spark job floor
-# (~0.2-0.3 s: task scheduling + Arrow result assembly, measured on the
-# 100-superstep katz kernel row) dwarfs the gather itself (~10 ms at 1.2M
-# edges), so below the cap every superstep runs on the driver: O(E) driver
-# memory (~16 B/row, 80 MB at the cap), same per-dst arithmetic as the
-# distributed executors.
-KERNEL_DRIVER_LOOP_MAX_EDGES = 5_000_000
-
-# ... and the dense driver vectors the loop iterates must stay reasonable
-# for sparse many-vertex layouts too (8 B x V per vector).
-KERNEL_DRIVER_LOOP_MAX_VERTICES = 20_000_000
-
-# Above the driver caps, FILE-BACKED layouts below this vertex count still
-# take the broadcast executor (tasks gather over the mmap'd blocks, the
-# driver applies): the slice-store executor's per-superstep fixed costs
-# (slice-file create/write/flush, per-pass jump jobs for CC) outweigh the
-# n*8 B driver vectors it avoids — 16 MB at this cap. Measured on a
-# file-backed Zipf layout (6M edges, 120k vertices, 4 blocks, local[4],
-# 4-core host; medians of 3-4 interleaved trials, broadcast vs slice store):
-# PageRank 10 supersteps 4.88 s vs 5.15 s, converged CC 1.28 s vs 2.37 s,
-# LPA 3 rounds 2.76 s vs 2.75 s. Above it the O(V)-per-superstep driver
-# collect + broadcast IS the bottleneck (131M edges/s/superstep for the
-# slice store at 192M edges).
-KERNEL_DISTRIBUTED_MIN_VERTICES = 2_000_000
 
 
 def _read_block(path: str, weighted: bool = False):
@@ -138,13 +107,11 @@ def _load_block_arrays(eb):
     ]
 
 
-def driver_block_arrays(eb, max_edges: int | None = None):
+def driver_block_arrays(eb):
     """``[(dst_lo, srcs, dsts, ws|None)]`` sorted by ``dst_lo``, or ``None``
-    when the layout's edge rows exceed ``max_edges`` (default: the driver
-    cap ``KERNEL_DRIVER_LOOP_MAX_EDGES``), counted before any bulk load."""
-    if max_edges is None:
-        max_edges = KERNEL_DRIVER_LOOP_MAX_EDGES
-    if block_edge_rows(eb) > max_edges:
+    when the layout's edge rows exceed the driver cap
+    (``routing.DRIVER_MAX_EDGES``), counted before any bulk load."""
+    if not routing.fits_driver(block_edge_rows(eb)):
         return None
     return _load_block_arrays(eb)
 
@@ -377,7 +344,7 @@ def build_edge_blocks(
     mmap'd id file in each task, and driver-resident state is the
     O(num_blocks) manifest plus scalars. Without ``spill_dir``: in-memory
     Arrow blocks with driver-broadcast id/degree arrays (the small-graph
-    fast path; capped by ``KERNEL_MAX_VERTICES``).
+    fast path; capped by ``routing.KERNEL_MAX_VERTICES`` under "auto").
 
     ``edges`` overrides the edge set (must already carry the directions the
     algorithm gathers over — e.g. LPA's canonical-symmetrized set plus
@@ -773,7 +740,7 @@ def pagerank_kernel(
     """PageRank via the CSR kernel. Returns ``(id, rank)``.
 
     Accepts a Graph or a prebuilt EdgeBlocks (amortize the layout across
-    runs); the executor is chosen by ``supersteps.choose_executor``. A
+    runs); the executor is chosen by ``routing.choose_executor``. A
     Graph below the driver cap runs on the driver over one Arrow collect;
     larger inputs build (or use) a block layout — file-backed blocks run
     the slice-store executor (the rank vector never crosses the driver),

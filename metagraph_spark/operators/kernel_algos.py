@@ -3,7 +3,7 @@ eigenvector / HITS kernels.
 
 Each iterative kernel is a program on the one superstep engine
 (``operators/supersteps.py``) and runs on whichever executor
-``supersteps.choose_executor`` picks — driver, broadcast or slice store —
+``routing.choose_executor`` picks — driver, broadcast or slice store —
 with the same per-block gather and the same apply step:
 
 - ``katz_kernel`` — ``x' = α·Aᵀx + β`` over weighted blocks (weighted
@@ -40,6 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from metagraph_spark.collect import mode_edges
 from metagraph_spark.exceptions import ConvergenceError, GraphPropertyError
 from metagraph_spark.graph import Graph
 from metagraph_spark.operators import supersteps as S
@@ -50,7 +51,7 @@ _IMAX = np.iinfo(np.int64).max
 
 def _weighted_layout(graph: Graph, spill_dir=None, mode: str = "sym"):
     return build_edge_blocks(
-        graph, edges=S.mode_edges(graph, mode), spill_dir=spill_dir,
+        graph, edges=mode_edges(graph, mode), spill_dir=spill_dir,
         with_weights=graph.is_weighted, with_degrees=False,
     )
 
@@ -413,7 +414,7 @@ def cc_blocks(graph: Graph, spill_dir: str | None = None,
     build once, run many."""
     return build_edge_blocks(
         graph, num_blocks=num_blocks, spill_dir=spill_dir,
-        edges=S.mode_edges(graph, "raw_sym"), with_degrees=False,
+        edges=mode_edges(graph, "raw_sym"), with_degrees=False,
     )
 
 
@@ -428,7 +429,7 @@ def label_blocks(graph: Graph, spill_dir: str | None = None,
     extra edge rows (VERDICT r4 #5). Build once, feed both kernels."""
     return build_edge_blocks(
         graph, num_blocks=num_blocks, spill_dir=spill_dir,
-        edges=S.mode_edges(graph, "canonical_sym"), with_degrees=False,
+        edges=mode_edges(graph, "canonical_sym"), with_degrees=False,
     )
 
 

@@ -31,15 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
 from metagraph_spark.graph import DST, ID, SRC, Graph
 from metagraph_spark.state import CheckpointManager, truncate_lineage
-
-# Above this vertex count the per-round label broadcast (16 B/row plus
-# framing — ~0.5 GB at the cap, held once per executor) stops being
-# reasonable and the vote join falls back to the shuffle plan. Same
-# size-routing philosophy as the broadcast-join threshold (guide §3.1);
-# scale-adaptive, not core-count-dependent.
-LPA_BROADCAST_MAX_VERTICES = 16_000_000
 
 
 def label_propagation_community(
@@ -48,9 +42,7 @@ def label_propagation_community(
     fixed_rounds: int | None = None,
     checkpointer: CheckpointManager | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int | None = None,
     kernel_spill_dir: str | None = None,
-    broadcast_max_vertices: int | None = None,
 ) -> DataFrame:
     """Return NodeMap ``(id: long, label: long)``.
 
@@ -61,9 +53,9 @@ def label_propagation_community(
 
     ``strategy="kernel"``/``"auto"`` (default) routes to the CSR-block vote kernel
     (``operators/kernel_algos.py:lpa_kernel`` — lexsorted run-length vote
-    counting, segmented argmax; EXACTLY the same labels, capped at
-    ``pagerank.KERNEL_MAX_VERTICES`` for ``"auto"``). The kernel keeps no
-    durable per-round state (explicit ``"kernel"`` + checkpointer raises).
+    counting, segmented argmax; EXACTLY the same labels; ``"auto"`` decides
+    by ``routing.use_kernel``). The kernel keeps no durable per-round state
+    (explicit ``"kernel"`` + checkpointer raises).
     """
     if strategy not in ("join", "kernel", "auto"):
         raise ValueError(f"unknown lpa strategy {strategy!r}")
@@ -72,58 +64,42 @@ def label_propagation_community(
             "strategy='kernel' keeps no durable per-round state and cannot "
             "honor a checkpointer; use strategy='join' or 'auto'"
         )
-    if strategy != "join" and checkpointer is None:
-        from metagraph_spark.operators.pagerank import KERNEL_MAX_VERTICES
+    if routing.use_kernel(
+        strategy, graph, kernel_spill_dir, checkpointer is not None
+    ):
+        from metagraph_spark.operators.kernel_algos import lpa_kernel
 
-        cap = (
-            kernel_max_vertices
-            if kernel_max_vertices is not None
-            else KERNEL_MAX_VERTICES
+        return lpa_kernel(
+            graph,
+            max_rounds=max_rounds,
+            fixed_rounds=fixed_rounds,
+            spill_dir=kernel_spill_dir,
         )
-        from metagraph_spark.operators.pagerank import KERNEL_AUTO_MAX_EDGES
+    return _lpa_join(graph, max_rounds, fixed_rounds, checkpointer)
 
-        if (
-            strategy == "kernel"
-            or kernel_spill_dir is not None
-            or (
-                graph.num_nodes() <= cap
-                and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-            )
-        ):
-            from metagraph_spark.operators.kernel_algos import lpa_kernel
 
-            return lpa_kernel(
-                graph,
-                max_rounds=max_rounds,
-                fixed_rounds=fixed_rounds,
-                spill_dir=kernel_spill_dir,
-            )
+def _lpa_join(
+    graph: Graph,
+    max_rounds: int,
+    fixed_rounds: int | None,
+    checkpointer: CheckpointManager | None,
+    broadcast: bool | None = None,
+) -> DataFrame:
+    """The join route of :func:`label_propagation_community`. The vote
+    plan broadcasts the label state when ``broadcast`` is True and takes
+    the shuffle-vote plan when False; None decides by
+    ``routing.broadcast_state`` on the measured vertex count."""
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cap_b = (
-        broadcast_max_vertices
-        if broadcast_max_vertices is not None
-        else LPA_BROADCAST_MAX_VERTICES
-    )
 
     # Narrower types (guide §2.3): when every node id fits int32 (checked
-    # exactly — one scan-aggregate over the edge cache and the explicit
-    # node set), the whole loop runs on int ids/labels: the one big layout
-    # exchange and the cached vote set halve their bytes, and the label
-    # values are ids, so a final cast back to long reproduces the exact
-    # output. Checkpointed runs stay on long (their saved state schema is
-    # a resume contract).
-    narrow = False
-    if checkpointer is None:
-        lim = 2**31 - 1
-        row = graph.edges.agg(
-            F.min(SRC), F.min(DST), F.max(SRC), F.max(DST)
-        ).collect()[0]
-        vals = [v for v in row if v is not None]
-        if graph.nodes is not None:
-            nrow = graph.nodes.agg(F.min(ID), F.max(ID)).collect()[0]
-            vals += [v for v in nrow if v is not None]
-        narrow = bool(vals) and min(vals) >= -lim - 1 and max(vals) <= lim
+    # exactly by ``routing.fits_int32`` over the edge cache and the
+    # explicit node set), the whole loop runs on int ids/labels: the one
+    # big layout exchange and the cached vote set halve their bytes, and
+    # the label values are ids, so a final cast back to long reproduces
+    # the exact output. Checkpointed runs stay on long (their saved state
+    # schema is a resume contract).
+    narrow = checkpointer is None and routing.fits_int32(graph.edges, graph.nodes)
 
     # One-exchange layout (guide §2.3/§2.4): the canonical-both-directions
     # vote edge set is produced by ONE repartition of e ∪ reverse(e) by the
@@ -160,7 +136,7 @@ def label_propagation_community(
     # once and BROADCAST the |V|-row label state into the vote joins, and
     # BOTH aggregations run partition-local: a round has ZERO data-sized
     # exchanges (plan-asserted in tests). Broadcasting V rows stops being
-    # reasonable past ``LPA_BROADCAST_MAX_VERTICES``; the fallback keys
+    # reasonable past ``routing.BROADCAST_MAX_VERTICES``; the fallback keys
     # the edge cache by SRC (the label join side) and pays ONE |E|-row
     # exchange re-keying the joined votes to DST — still one fewer
     # full-edge shuffle than aggregating by (dst,label) then by dst.
@@ -183,7 +159,8 @@ def label_propagation_community(
         extra = extra.select(F.col(ID).cast("int").alias(ID))
     extra = truncate_lineage(extra.distinct())
     nodes = truncate_lineage(endpoints.unionAll(extra).distinct())
-    use_bcast = nodes.count() <= cap_b
+    use_bcast = (routing.broadcast_state(nodes.count())
+                 if broadcast is None else broadcast)
     if not use_bcast:
         old = sym
         sym = _build_sym(SRC)

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
 from metagraph_spark.exceptions import ConvergenceError
 from metagraph_spark.graph import DST, ID, SRC, Graph
 from metagraph_spark.state import (
@@ -53,36 +54,6 @@ from metagraph_spark.state import (
 _STATE_COLS = ("id", "outdeg", "dangling", "rank", "prev")
 
 
-# above this vertex count the IN-MEMORY kernel's dense driver-side rank
-# vector (8 B×V plus working copies) stops being reasonable; the join path
-# has no such cap, and neither does the FILE-BACKED kernel
-# (``kernel_spill_dir``), whose layout/loop/result all stay distributed
-# (driver O(num_blocks); measured at 10^8 vertices / 2·10^8 edges:
-# driver max-RSS 0.14 GB, rank mass 1.0 — see BENCH/BASELINE.md). The
-# file-backed route's hard cap is int32 positions (V < 2^31).
-KERNEL_MAX_VERTICES = 50_000_000
-
-# "auto" additionally caps the EDGE count: the kernel pays a one-time
-# layout (full |E| shuffle + per-block pack — measured 131.9 s at 100M
-# edges, BENCH_r04 extras.big_cc_kernel_layout_sec) that a single
-# converged run cannot amortize at large |E|, while the join path starts
-# iterating immediately on the src-partitioned edge cache. Callers who DO
-# amortize the layout across runs prebuild blocks (build_edge_blocks /
-# cc_blocks + the kernel entrypoints) or pass kernel_spill_dir, both of
-# which bypass this cap.
-KERNEL_AUTO_MAX_EDGES = 20_000_000
-
-# Below these caps the join-strategy superstep re-keys the edge cache by
-# DST once and BROADCASTS the per-superstep contribution vector into the
-# gather join (guide §2.4/§3.1): the groupBy(dst) and the merge-back join
-# against the hash-stamped vertex state then run partition-local, making
-# a superstep ONE shuffle-free stage instead of two data exchanges + an
-# AQE stage chain. Same size-routing as the LPA/katz broadcast plans;
-# above the caps the shuffled superstep keeps AQE's skew/coalesce
-# freedoms (measured faster at 100M edges).
-PAGERANK_BROADCAST_MAX_VERTICES = 16_000_000
-
-
 def pagerank(
     graph: Graph,
     damping: float = 0.85,
@@ -92,7 +63,6 @@ def pagerank(
     checkpointer: CheckpointManager | None = None,
     metrics_sink: list | None = None,
     strategy: str = "auto",
-    kernel_max_vertices: int = KERNEL_MAX_VERTICES,
     kernel_spill_dir: str | None = None,
     copartition_state: bool = False,
     warm_start: DataFrame | None = None,
@@ -129,17 +99,17 @@ def pagerank(
     exchange itself dominates (cross-rack shuffle fabric, very wide vertex
     state).
 
-    ``strategy``: ``"auto"`` (default — kernel when the vertex count fits
-    or a spill dir is given and no checkpointer is requested, join
-    otherwise; the kernels measure 2.6-7x faster and parity is asserted
-    across fixed/converged/file-backed modes), ``"join"`` (iterative
-    DataFrame joins — scales to any V, the only checkpointable strategy),
-    or ``"kernel"`` (CSR/Arrow zero-shuffle supersteps; dense driver rank
-    vector capped at ``kernel_max_vertices`` UNLESS ``kernel_spill_dir``
-    is given, which switches to the file-backed layout whose vectors live
-    on the shared filesystem and never touch the driver — V capped only
-    by int32 positions). Both strategies implement the identical update
-    rule and are asserted equal by shared golden tests."""
+    ``strategy``: ``"auto"`` (default — ``routing.use_kernel``: kernel
+    when the graph fits the kernel caps or a spill dir is given and no
+    checkpointer is requested, join otherwise; the kernels measure 2.6-7x
+    faster and parity is asserted across fixed/converged/file-backed
+    modes), ``"join"`` (iterative DataFrame joins — scales to any V, the
+    only checkpointable strategy), or ``"kernel"`` (CSR/Arrow zero-shuffle
+    supersteps; ``kernel_spill_dir`` switches to the file-backed layout
+    whose vectors live on the shared filesystem and never touch the
+    driver — V capped only by int32 positions). Both strategies implement
+    the identical update rule and are asserted equal by shared golden
+    tests."""
     if strategy not in ("join", "kernel", "auto"):
         raise ValueError(f"unknown pagerank strategy {strategy!r}")
     if strategy == "kernel" and checkpointer is not None:
@@ -155,39 +125,30 @@ def pagerank(
             "strategy='kernel' cannot seed from warm_start (the kernel "
             "layouts start uniform); use strategy='join' or 'auto'"
         )
-    if strategy != "join" and warm_start is None:
-        use_kernel = strategy == "kernel" or (
-            checkpointer is None
-            and (
-                kernel_spill_dir is not None
-                or (
-                    graph.num_nodes() <= kernel_max_vertices
-                    and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
-                )
-            )
+    if warm_start is None and routing.use_kernel(
+        strategy, graph, kernel_spill_dir, checkpointer is not None
+    ):
+        from metagraph_spark.operators.kernel import (
+            build_edge_blocks,
+            pagerank_kernel,
         )
-        if use_kernel:
-            from metagraph_spark.operators.kernel import (
-                build_edge_blocks,
-                pagerank_kernel,
-            )
 
-            target, built = graph, None
-            if kernel_spill_dir is not None:
-                built = build_edge_blocks(graph, spill_dir=kernel_spill_dir)
-                target = built
-            try:
-                return pagerank_kernel(
-                    target,
-                    damping=damping,
-                    maxiter=maxiter,
-                    tolerance=tolerance,
-                    fixed_iterations=fixed_iterations,
-                    metrics_sink=metrics_sink,
-                )
-            finally:
-                if built is not None:
-                    built.unpersist()  # manifest cache; files stay reusable
+        target, built = graph, None
+        if kernel_spill_dir is not None:
+            built = build_edge_blocks(graph, spill_dir=kernel_spill_dir)
+            target = built
+        try:
+            return pagerank_kernel(
+                target,
+                damping=damping,
+                maxiter=maxiter,
+                tolerance=tolerance,
+                fixed_iterations=fixed_iterations,
+                metrics_sink=metrics_sink,
+            )
+        finally:
+            if built is not None:
+                built.unpersist()  # manifest cache; files stay reusable
     spark = graph.edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if graph.is_directed and graph.metadata.get("partitioned_by_src") == n_part:
@@ -256,15 +217,18 @@ def pagerank(
     base = (1.0 - damping) / n
     total_iters = fixed_iterations if fixed_iterations is not None else maxiter
     err = None
-    # single-stage broadcast supersteps for small graphs (see
-    # PAGERANK_BROADCAST_MAX_VERTICES): dst-keyed edge cache + broadcast
-    # contribs + hash-stamped state. Checkpointed and warm-started runs
-    # keep the established plan (their state/resume contracts are pinned
-    # by tests and the streaming-maintenance path).
+    # single-stage broadcast supersteps for small graphs (below the
+    # broadcast cap, and within the auto-kernel edge cap): dst-keyed edge
+    # cache + broadcast contribs + hash-stamped state. The superstep
+    # becomes ONE shuffle-free stage instead of two data exchanges + an
+    # AQE stage chain; above the caps the shuffled superstep keeps AQE's
+    # skew/coalesce freedoms (measured faster at 100M edges). Checkpointed
+    # and warm-started runs keep the established plan (their state/resume
+    # contracts are pinned by tests and the streaming-maintenance path).
     small = (
         checkpointer is None
-        and n <= PAGERANK_BROADCAST_MAX_VERTICES
-        and graph.num_edges() <= KERNEL_AUTO_MAX_EDGES
+        and routing.broadcast_state(n)
+        and graph.num_edges() <= routing.KERNEL_AUTO_MAX_EDGES
     )
     # ONLY fixed-superstep runs take the broadcast plan. CONVERGED runs
     # keep the established superstep plan UNCHANGED: any plan change
@@ -274,7 +238,6 @@ def pagerank(
     # count — fixed-iteration results are count-pinned and therefore
     # robust to ulp-level reordering under the 6-decimal rounding.
     use_bcast = small and warm_start is None and fixed_iterations is not None
-    use_copart = copartition_state
     edges_b = None
     if use_bcast:
         edges_b = edges.repartition(n_part, DST).persist()
@@ -284,13 +247,12 @@ def pagerank(
         def _release() -> None:  # noqa: F811 — now owns the dst cache
             edges_b.unpersist()
 
-    if use_bcast or (use_copart and not copartition_state):
         state = truncate_lineage_partitioned(
             state.repartition(n_part, ID), [ID], n_part
         )
     lineage = (
         LineageManager(partition_cols=[ID], n_part=n_part)
-        if (use_copart or use_bcast)
+        if (copartition_state or use_bcast)
         else LineageManager()
     )
     # dangling mass of the CURRENT state (scan-aggregate, no joins)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
+from metagraph_spark.collect import collect_edges
 from metagraph_spark.exceptions import GraphPropertyError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
 from metagraph_spark.state import truncate_lineage
@@ -399,16 +401,13 @@ def random_walk_sampling(
 # isomorphism (the fixtures are relabeled induced subgraphs; nx's
 # DiGraphMatcher.subgraph_is_isomorphic analog).
 
-SUBISO_MAX_PATTERN_NODES = 16
-SUBISO_MAX_EDGES = 1_000_000
 
-
-def _neighbor_sets(edges, directed: bool):
-    """edge list -> (nodes, successors, predecessors) dict-of-sets."""
-    nodes, succ, pred = set(), {}, {}
-    for s, d in edges:
-        nodes.add(s)
-        nodes.add(d)
+def _neighbor_sets(graph: Graph, directed: bool):
+    """The one driver collect of ``graph`` -> (nodes, successors,
+    predecessors) dict-of-sets over positions (nodes: every node)."""
+    e = collect_edges(graph, "raw")
+    nodes, succ, pred = set(range(len(e.ids))), {}, {}
+    for s, d in zip(e.src.tolist(), e.dst.tolist()):
         succ.setdefault(s, set()).add(d)
         pred.setdefault(d, set()).add(s)
         if not directed:
@@ -420,8 +419,8 @@ def _neighbor_sets(edges, directed: bool):
 def subisomorphic(
     graph: Graph,
     pattern: Graph,
-    max_edges: int = SUBISO_MAX_EDGES,
-    max_pattern_nodes: int = SUBISO_MAX_PATTERN_NODES,
+    max_edges: int = routing.SUBISO_MAX_EDGES,
+    max_pattern_nodes: int = routing.SUBISO_MAX_PATTERN_NODES,
 ) -> bool:
     """True iff ``pattern`` is (induced-)subgraph-isomorphic to ``graph``.
 
@@ -438,11 +437,9 @@ def subisomorphic(
             "subisomorphic requires both graphs to have the same directedness"
         )
     n_pat = pattern.num_nodes()
-    if n_pat > max_pattern_nodes:
-        raise GraphPropertyError(
-            f"subisomorphic backtracking is exponential in pattern size; "
-            f"pattern has {n_pat} nodes > max {max_pattern_nodes}"
-        )
+    routing.refuse_above(
+        "subisomorphic", "pattern nodes", n_pat, max_pattern_nodes,
+        " — backtracking is exponential in pattern size")
     # the node pre-check is safe on raw counts; the EDGE pre-check must
     # compare like with like — the search dedups edge rows (and the engine
     # tolerates duplicate edges elsewhere), so a pattern with duplicated
@@ -456,12 +453,7 @@ def subisomorphic(
         if p_distinct > graph.edges.select(SRC, DST).distinct().count():
             return False
     directed = graph.is_directed
-    p_edges = [
-        (r[SRC], r[DST])
-        for r in pattern.edges.select(SRC, DST).distinct().collect()
-    ]
-    p_nodes, p_succ, p_pred = _neighbor_sets(p_edges, directed)
-    p_nodes |= {r[ID] for r in pattern.node_ids().collect()}
+    p_nodes, p_succ, p_pred = _neighbor_sets(pattern, directed)
     min_out = min(len(p_succ.get(u, ())) for u in p_nodes)
     min_in = min(len(p_pred.get(u, ())) for u in p_nodes)
 
@@ -481,14 +473,10 @@ def subisomorphic(
         e.join(keep.select(F.col(ID).alias(SRC)), SRC, "left_semi")
         .join(keep.select(F.col(ID).alias(DST)), DST, "left_semi")
     )
-    m = screened.count()
-    if m > max_edges:
-        raise GraphPropertyError(
-            f"subisomorphic driver search refuses {m} screened edges > max "
-            f"{max_edges} (raise max_edges or tighten the pattern)"
-        )
-    t_edges = [(r[SRC], r[DST]) for r in screened.collect()]
-    t_nodes, t_succ, t_pred = _neighbor_sets(t_edges, True)
+    routing.refuse_above(
+        "subisomorphic", "screened edge rows", screened.count(), max_edges,
+        " — a driver search; raise max_edges or tighten the pattern")
+    t_nodes, t_succ, t_pred = _neighbor_sets(Graph(edges=screened), True)
 
     # Isolated (degree-0) pattern nodes: under INDUCED semantics they need
     # images with no edges to any other image. Target nodes with no edges
@@ -566,7 +554,7 @@ def subisomorphic(
 
 
 def graph_isomorphic(
-    g1: Graph, g2: Graph, max_edges: int = SUBISO_MAX_EDGES
+    g1: Graph, g2: Graph, max_edges: int = routing.SUBISO_MAX_EDGES
 ) -> bool:
     """``util.graph.isomorphic`` (``plugins/core/algorithms/utility.py:120-
     122``, no concrete impl in the reference) — EXACT for graphs whose
@@ -574,11 +562,9 @@ def graph_isomorphic(
     invariants (distributed, cheap, resolves most negatives), then induced
     sub-isomorphism of g2 in g1 — with equal node and edge counts an
     induced embedding IS an isomorphism. Pattern-size guard: |V| must fit
-    ``SUBISO_MAX_PATTERN_NODES`` for the exact phase."""
+    ``routing.SUBISO_MAX_PATTERN_NODES`` for the exact phase."""
     from metagraph_spark.operators.utility import graph_isomorphic_quick_reject
 
     if not graph_isomorphic_quick_reject(g1, g2):
         return False
-    return subisomorphic(
-        g1, g2, max_edges=max_edges, max_pattern_nodes=SUBISO_MAX_PATTERN_NODES
-    )
+    return subisomorphic(g1, g2, max_edges=max_edges)

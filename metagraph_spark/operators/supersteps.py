@@ -19,14 +19,15 @@ executor owns what differs between routes:
   crosses the driver. It owns the resume/commit markers, slice-loss checks
   and the distributed emit.
 
-**Routing** (:func:`choose_executor`) picks the executor from measured
-sizes: the edge rows the driver would hold after symmetrization and the
-vertex count, against the ``kernel.KERNEL_DRIVER_LOOP_MAX_*`` caps. Every
-``Graph`` input below the driver cap enters the driver executor through one
-Arrow collect (:func:`_driver_graph_arrays`); above it the layout is built,
-file-backed blocks with at least ``kernel.KERNEL_DISTRIBUTED_MIN_VERTICES``
-vertices take the slice store and all other blocks the broadcast executor.
-An injected slice store always takes the slice store.
+**Routing** (:func:`route`, with the rule ``routing.choose_executor``)
+picks the executor from measured sizes: the edge rows the driver would
+hold after symmetrization and the vertex count, against the
+``routing.DRIVER_MAX_*`` caps. Every ``Graph`` input within the driver cap
+enters the driver executor through the one driver collect
+(:func:`collect.collect_edges`); above it the layout is built, file-backed
+blocks with at least ``routing.SLICE_STORE_MIN_VERTICES`` vertices take the
+slice store and all other blocks the broadcast executor. An injected slice
+store always takes the slice store.
 """
 
 from __future__ import annotations
@@ -40,44 +41,15 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from metagraph_spark import routing
+from metagraph_spark.collect import collect_edges, sort_by
 from metagraph_spark.exceptions import ConvergenceError
-from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
+from metagraph_spark.graph import Graph
 from metagraph_spark.operators import kernel
 from metagraph_spark.operators.kernel import EdgeBlocks, LocalSliceStore
 
 _AUX = "aux"
-
-
-# ------------------------------------------------------------------ routing
-def driver_edge_rows(graph: Graph, mode: str) -> int:
-    """Edge rows the driver holds for ``graph`` collected in ``mode``:
-    the row count AFTER symmetrization (an upper bound for the dedup and
-    self-loop-dropping modes), from the cached ``num_edges()``."""
-    e = graph.num_edges()
-    one_way = mode == "reverse" or (mode == "sym" and graph.is_directed)
-    return e if one_way else 2 * e
-
-
-def choose_executor(edge_rows: int, num_vertices: int, file_backed: bool,
-                    slice_store: bool = False) -> str:
-    """The one routing rule: ``"driver"``, ``"broadcast"`` or ``"slice"``.
-
-    ``edge_rows`` counts rows after symmetrization (:func:`driver_edge_rows`
-    for a Graph, block rows for prebuilt blocks); both driver caps are
-    inclusive. Above them only file-backed layouts of at least
-    ``KERNEL_DISTRIBUTED_MIN_VERTICES`` vertices pay the slice store's
-    fixed costs. An injected slice store always wins (its caller asked for
-    durable slice vectors)."""
-    if slice_store:
-        return "slice"
-    if (edge_rows <= kernel.KERNEL_DRIVER_LOOP_MAX_EDGES
-            and num_vertices <= kernel.KERNEL_DRIVER_LOOP_MAX_VERTICES):
-        return "driver"
-    if file_backed and num_vertices >= kernel.KERNEL_DISTRIBUTED_MIN_VERTICES:
-        return "slice"
-    return "broadcast"
 
 
 # -------------------------------------------------------- driver edge arrays
@@ -91,73 +63,15 @@ class DriverArrays(NamedTuple):
     ws: np.ndarray | None
 
 
-def mode_edges(graph: Graph, mode: str) -> DataFrame:
-    """The Spark edge set of ``mode`` (what the block layouts pack):
-
-    - ``"sym"`` — ``graph.symmetrized()`` (weights kept);
-    - ``"raw_sym"`` — both directions of every raw row;
-    - ``"canonical_sym"`` — deduplicated canonical pairs without
-      self-loops, both directions;
-    - ``"reverse"`` — every row reversed (weights kept)."""
-    e = graph.edges
-    if mode == "sym":
-        return graph.symmetrized()
-    if mode == "raw_sym":
-        e = e.select(SRC, DST)
-        return e.unionAll(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
-    if mode == "canonical_sym":
-        return Graph(edges=graph.canonical_undirected_edges().select(SRC, DST),
-                     is_directed=False).symmetrized()
-    cols = [F.col(DST).alias(SRC), F.col(SRC).alias(DST)]
-    return e.select(*cols, *([F.col(WEIGHT)] if graph.is_weighted else []))
-
-
 def _driver_graph_arrays(graph: Graph, mode: str,
                          weighted: bool = False) -> DriverArrays:
-    """:func:`mode_edges` built on the driver from ONE Arrow collect of the
-    edge rows (plus the explicit node ids, if any) — no layout Spark jobs.
-    The node universe is edge endpoints ∪ ``graph.nodes``, exactly
-    ``node_ids()``; the output is stable-sorted by dst position like packed
-    blocks, so every gather applies unchanged. ``weighted`` carries the
-    weight column of a weighted graph in the ``"sym"``/``"reverse"`` modes
-    (otherwise ``ws=None``)."""
-    weighted = weighted and graph.is_weighted and mode in ("sym", "reverse")
-    cols = [SRC, DST] + ([F.col(WEIGHT).cast("double").alias(WEIGHT)]
-                         if weighted else [])
-    pdf = graph.edges.select(*cols).toPandas()
-    s = pdf[SRC].to_numpy(dtype=np.int64)
-    d = pdf[DST].to_numpy(dtype=np.int64)
-    w = pdf[WEIGHT].to_numpy(dtype=np.float64) if weighted else None
-    endpoints = [s, d]
-    if graph.nodes is not None:
-        endpoints.append(
-            graph.nodes.select(ID).toPandas()[ID].to_numpy(dtype=np.int64)
-        )
-    ids = np.unique(np.concatenate(endpoints))
-    n = len(ids)
-    sp = np.searchsorted(ids, s)
-    dp = np.searchsorted(ids, d)
-    if mode == "canonical_sym":
-        keep = sp != dp
-        uniq = np.unique(np.minimum(sp[keep], dp[keep]) * np.int64(n)
-                         + np.maximum(sp[keep], dp[keep]))
-        lo, hi = uniq // n, uniq % n
-        src_pos, dst_pos = np.concatenate([lo, hi]), np.concatenate([hi, lo])
-    elif mode == "raw_sym":
-        src_pos, dst_pos = np.concatenate([sp, dp]), np.concatenate([dp, sp])
-    elif mode == "reverse":
-        src_pos, dst_pos = dp, sp
-    elif graph.is_directed:  # "sym" of a directed graph: the rows as-is
-        src_pos, dst_pos = sp, dp
-    else:  # "sym": rows, then the reverse of every non-self-loop row
-        keep = sp != dp
-        src_pos = np.concatenate([sp, dp[keep]])
-        dst_pos = np.concatenate([dp, sp[keep]])
-        if w is not None:
-            w = np.concatenate([w, w[keep]])
-    order = np.argsort(dst_pos, kind="stable")
-    return DriverArrays(graph.edges.sparkSession, ids, src_pos[order],
-                        dst_pos[order], None if w is None else w[order])
+    """The ``mode`` edges of ``graph`` from the one driver collect
+    (:func:`collect.collect_edges`), stable-sorted by dst position like
+    packed blocks, so every gather applies unchanged."""
+    e = collect_edges(graph, mode, weighted)
+    order, _ = sort_by(e.dst, len(e.ids))
+    return DriverArrays(graph.edges.sparkSession, e.ids, e.src[order],
+                        e.dst[order], None if e.w is None else e.w[order])
 
 
 def _arrays_from_blocks(eb: EdgeBlocks) -> DriverArrays:
@@ -219,7 +133,7 @@ class Program:
     measures: tuple = ()
     carries = False
     jumps = False
-    mode = "sym"         # :func:`mode_edges` mode of a Graph input
+    mode = "sym"         # ``collect.mode_edges`` mode of a Graph input
     weighted = False     # gather reads the layout's per-edge weights
     meta: dict = {}
 
@@ -668,8 +582,9 @@ def route(source, mode: str, weighted: bool, layout, spill_dir=None,
     ``layout(graph, spill_dir)`` builds its blocks (``owned``: the caller
     unpersists them), which are then routed by their measured rows."""
     if isinstance(source, Graph):
-        name = choose_executor(
-            driver_edge_rows(source, mode), source.num_nodes(),
+        name = routing.choose_executor(
+            routing.driver_edge_rows(source, mode),
+            routing.vertex_count(source),
             spill_dir is not None, slice_store is not None)
         if name == "driver":
             return name, _driver_graph_arrays(source, mode, weighted), None
@@ -677,8 +592,9 @@ def route(source, mode: str, weighted: bool, layout, spill_dir=None,
         owned = source
     else:
         owned = None
-    name = choose_executor(kernel.block_edge_rows(source), source.n,
-                           source.manifest is not None, slice_store is not None)
+    name = routing.choose_executor(
+        kernel.block_edge_rows(source), source.n,
+        source.manifest is not None, slice_store is not None)
     return name, source, owned
 
 

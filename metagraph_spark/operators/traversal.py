@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
+from metagraph_spark.collect import collect_edges, position, sort_by
 from metagraph_spark.exceptions import ConvergenceError, GraphPropertyError
 from metagraph_spark.graph import DST, ID, SRC, WEIGHT, Graph
 from metagraph_spark.state import truncate_lineage
@@ -231,54 +233,31 @@ def minimum_spanning_tree(graph: Graph, max_rounds: int = 64) -> Graph:
 # Sequential traversals — DRIVER KERNELS (same scope decision as flow.py:
 # the visit order of DFS / the expansion order of A* depends on every prior
 # step, so no frontier-parallel plan exists; the reference's own concrete
-# impls are single-threaded networkx/scipy). One Arrow pass assembles a
-# positional CSR sorted by (src, dst) — ascending-id neighbor preference is
-# the documented deterministic tie-break — the walk runs in numpy/python on
-# the driver, and only the O(V) result table goes back to Spark. A hard
-# ``max_edges`` guard refuses graphs outside this scope instead of OOMing.
-
-DRIVER_TRAVERSAL_MAX_EDGES = 10_000_000
+# impls are single-threaded networkx/scipy). The one driver collect
+# assembles a positional CSR sorted by (src, dst) — ascending-id neighbor
+# preference is the documented deterministic tie-break — the walk runs in
+# numpy/python on the driver, and only the O(V) result table goes back to
+# Spark. A ``max_edges`` guard refuses graphs outside this scope instead
+# of OOMing.
 
 
 def _driver_csr(graph: Graph, max_edges: int, op: str, weights: bool):
-    """One Arrow pass -> (node_arr, indptr, nbr_pos, w or None).
+    """One driver collect -> (node_arr, indptr, nbr_pos, w or None).
 
     Adjacency is ascending-dst within each source (the tie-break every
     driver-kernel traversal documents). Directed graphs keep out-edges
     only (nx semantics on DiGraph); undirected graphs are symmetrized.
     """
-    import numpy as np
-
-    m = graph.num_edges() * (1 if graph.is_directed else 2)
-    if m > max_edges:
-        raise GraphPropertyError(
-            f"{op} is a driver kernel (inherently sequential visit order); "
-            f"graph has {m} (symmetrized) edges > max {max_edges}"
-        )
-    node_arr = np.sort(graph.node_ids().toArrow().column(ID).to_numpy())
-    cols = [SRC, DST] + ([WEIGHT] if weights else [])
-    e_tbl = graph.symmetrized().select(*cols).toArrow()
-    src_pos = np.searchsorted(node_arr, e_tbl.column(SRC).to_numpy())
-    dst_pos = np.searchsorted(node_arr, e_tbl.column(DST).to_numpy())
-    w = e_tbl.column(WEIGHT).to_numpy().astype("float64") if weights else None
-    order = np.lexsort((dst_pos, src_pos))
-    src_pos, dst_pos = src_pos[order], dst_pos[order]
-    if w is not None:
-        w = w[order]
-    n = len(node_arr)
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.add.at(indptr, src_pos + 1, 1)
-    np.cumsum(indptr, out=indptr)
-    return node_arr, indptr, dst_pos, w
-
-
-def _resolve_node(node_arr, node_id: int, what: str) -> int:
-    import numpy as np
-
-    p = int(np.searchsorted(node_arr, node_id))
-    if not (0 <= p < len(node_arr) and node_arr[p] == node_id):
-        raise ValueError(f"{what} node {node_id} not in graph")
-    return p
+    routing.refuse_above(
+        op, "edge rows", routing.driver_edge_rows(graph, "sym"), max_edges,
+        " — a driver kernel (inherently sequential visit order); raise "
+        "max_edges to allow it")
+    e = collect_edges(graph, "sym", weights)
+    n = len(e.ids)
+    by_dst, _ = sort_by(e.dst, n)
+    by_src, indptr = sort_by(e.src[by_dst], n)
+    order = by_dst[by_src]
+    return e.ids, indptr, e.dst[order], None if e.w is None else e.w[order]
 
 
 def _dfs_kernel(graph: Graph, source_node: int, max_edges: int):
@@ -287,7 +266,7 @@ def _dfs_kernel(graph: Graph, source_node: int, max_edges: int):
     import numpy as np
 
     node_arr, indptr, nbr, _ = _driver_csr(graph, max_edges, "dfs", False)
-    s = _resolve_node(node_arr, source_node, "source")
+    s = position(node_arr, source_node, "source")
     n = len(node_arr)
     seen = np.zeros(n, dtype=bool)
     parent = np.full(n, -1, dtype=np.int64)
@@ -311,7 +290,8 @@ def _dfs_kernel(graph: Graph, source_node: int, max_edges: int):
 
 
 def dfs_iter(
-    graph: Graph, source_node: int, max_edges: int = DRIVER_TRAVERSAL_MAX_EDGES
+    graph: Graph, source_node: int,
+    max_edges: int = routing.SEQUENTIAL_MAX_EDGES,
 ) -> DataFrame:
     """``traversal.dfs_iter`` (``plugins/core/algorithms/traversal.py:41-44``;
     nx impl ``plugins/networkx/algorithms.py:267-274``): node ids in DFS
@@ -325,7 +305,8 @@ def dfs_iter(
 
 
 def dfs_tree(
-    graph: Graph, source_node: int, max_edges: int = DRIVER_TRAVERSAL_MAX_EDGES
+    graph: Graph, source_node: int,
+    max_edges: int = routing.SEQUENTIAL_MAX_EDGES,
 ) -> DataFrame:
     """``traversal.dfs_tree`` (``traversal.py:47-51``; nx impl
     ``networkx/algorithms.py:276-282``): NodeMap ``(id, parent)`` over nodes
@@ -344,7 +325,7 @@ def astar_search(
     source_node: int,
     target_node: int,
     heuristic_func,
-    max_edges: int = DRIVER_TRAVERSAL_MAX_EDGES,
+    max_edges: int = routing.SEQUENTIAL_MAX_EDGES,
 ) -> DataFrame:
     """``traversal.astar_search`` (``traversal.py:75-87``; nx impl
     ``networkx/algorithms.py:583-600``): A* path from source to target as
@@ -362,8 +343,8 @@ def astar_search(
     node_arr, indptr, nbr, w = _driver_csr(
         graph, max_edges, "astar_search", graph.is_weighted
     )
-    s = _resolve_node(node_arr, source_node, "source")
-    t = _resolve_node(node_arr, target_node, "target")
+    s = position(node_arr, source_node, "source")
+    t = position(node_arr, target_node, "target")
     n = len(node_arr)
     g = np.full(n, np.inf, dtype=np.float64)
     parent = np.full(n, -1, dtype=np.int64)

@@ -46,21 +46,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
+from metagraph_spark.collect import collect_edges
 from metagraph_spark.graph import DST, SRC, Graph
-
-# rank-space keys are ra*n + rb in int64: requires n < 2^31 (the same
-# positional cap as the other CSR kernels; ra*n then fits 2^62)
-TRI_KERNEL_MAX_NODES = 2**31 - 1
-
-# Below this edge count the degree-rank relabel + key-file build runs on
-# the driver (one Arrow collect + numpy sort) instead of the distributed
-# rank-sort/key-sort pipeline — the Spark jobs of that pipeline dominate
-# the whole query at bench scale (same guarded size route as the other
-# round-6 driver kernels). The triangle COUNT stays a distributed job
-# either way; the count is invariant to rank assignment, and the local
-# (degree, id) lexsort is the same total order the distributed rank sort
-# uses.
-TRI_DRIVER_LAYOUT_MAX_EDGES = 5_000_000
 
 
 def _write_sorted_keys(spark, keys_df, path: str) -> int:
@@ -219,7 +207,7 @@ def triangle_count_kernel(
     n = graph.num_nodes()
     if n == 0:
         return 0
-    if n > TRI_KERNEL_MAX_NODES:
+    if n > routing.TRI_KERNEL_MAX_NODES:
         raise ValueError(
             f"triangle kernel rank keys need n < 2^31 (got {n}); use "
             f"triangle_count(strategy='join')"
@@ -229,42 +217,33 @@ def triangle_count_kernel(
         if num_blocks is not None
         else spark.conf.get("spark.sql.shuffle.partitions")
     )
-    if graph.num_edges() <= TRI_DRIVER_LAYOUT_MAX_EDGES:
-        import shutil as _sh
-
-        pdf = graph.canonical_undirected_edges().select(SRC, DST).toPandas()
+    if routing.fits_driver(routing.driver_edge_rows(graph, "canonical")):
+        # the degree-rank relabel + key-file build on the driver over the
+        # one driver collect (the Spark jobs of the distributed rank-sort /
+        # key-sort pipeline dominate the whole query at bench scale); the
+        # triangle COUNT stays a distributed job either way. Ranks cover
+        # every node (isolates rank first): the count is invariant to rank
+        # assignment, and (degree, id) is the distributed rank sort's order
+        e = collect_edges(graph, "canonical")
+        if len(e.src) == 0:
+            return 0
         owned_dir = spill_dir is None
         if owned_dir:
             spill_dir = tempfile.mkdtemp(prefix="mgspark_trik_")
         os.makedirs(spill_dir, exist_ok=True)
         keys_path = os.path.join(spill_dir, "tri_keys.npy")
         try:
-            if len(pdf) == 0:
-                return 0
-            s = pdf[SRC].to_numpy(dtype=np.int64)
-            d = pdf[DST].to_numpy(dtype=np.int64)
-            nodes, inv = np.unique(
-                np.concatenate([s, d]), return_inverse=True
-            )
-            si, di = inv[: len(s)], inv[len(s):]
-            degc = np.bincount(si, minlength=len(nodes)) + np.bincount(
-                di, minlength=len(nodes)
-            )
-            order = np.lexsort((nodes, degc))
-            rank = np.empty(len(nodes), dtype=np.int64)
-            rank[order] = np.arange(len(nodes))
-            ra, rb = rank[si], rank[di]
-            keys = np.sort(
-                np.minimum(ra, rb) * np.int64(n) + np.maximum(ra, rb)
-            )
+            k = len(e.ids)  # == n
+            deg = np.bincount(e.src, minlength=k) + np.bincount(e.dst, minlength=k)
+            rank = np.empty(k, dtype=np.int64)
+            rank[np.argsort(deg, kind="stable")] = np.arange(k)
+            ra, rb = rank[e.src], rank[e.dst]
+            keys = np.sort(np.minimum(ra, rb) * np.int64(n) + np.maximum(ra, rb))
             np.save(keys_path, keys)
-            m = len(keys)
-            return _count_ranges(
-                spark, keys_path, n, m, nb, chunk_pairs
-            )
+            return _count_ranges(spark, keys_path, n, len(keys), nb, chunk_pairs)
         finally:
             if owned_dir:
-                _sh.rmtree(spill_dir, ignore_errors=True)
+                shutil.rmtree(spill_dir, ignore_errors=True)
             else:
                 try:
                     os.unlink(keys_path)

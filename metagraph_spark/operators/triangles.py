@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from metagraph_spark import routing
 from metagraph_spark.graph import DST, SRC, Graph
 
 
@@ -72,16 +73,13 @@ def triangle_count(graph: Graph, strategy: str = "auto",
         raise ValueError(f"unknown triangle_count strategy {strategy!r}")
     if strategy != "join":
         from metagraph_spark.operators.kernel import shared_fs_available
-        from metagraph_spark.operators.tri_kernel import (
-            TRI_KERNEL_MAX_NODES,
-            triangle_count_kernel,
-        )
+        from metagraph_spark.operators.tri_kernel import triangle_count_kernel
 
         import tempfile
 
         probe_dir = kernel_spill_dir or tempfile.gettempdir()
         if strategy == "kernel" or (
-            graph.num_nodes() <= TRI_KERNEL_MAX_NODES
+            graph.num_nodes() <= routing.TRI_KERNEL_MAX_NODES
             and shared_fs_available(graph.edges.sparkSession, probe_dir)
         ):
             return triangle_count_kernel(

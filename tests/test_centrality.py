@@ -220,21 +220,28 @@ def test_closeness_subset_matches_nx(spark):
     assert_close_map(got, expected, rel_tol=1e-9)
 
 
-def test_closeness_all_nodes_guard(spark, monkeypatch):
+def test_closeness_all_nodes_guard(spark):
     """closeness over ALL nodes is O(V^2) relaxation state — refused past
-    the guard; an explicit NodeSet subset always works."""
+    the guard (measured node count against the cap, checked before any
+    relaxation); an explicit NodeSet subset always works."""
     import metagraph_spark.operators.centrality as C
     from metagraph_spark.exceptions import GraphPropertyError
+    from metagraph_spark.routing import CLOSENESS_ALL_NODES_LIMIT as cap
 
-    monkeypatch.setattr(C, "CLOSENESS_ALL_NODES_LIMIT", 3)
-    g = build(
-        df_from_edges(
-            spark, [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0)], weighted=True
-        ),
-        is_directed=False,
-    )
-    with pytest.raises(GraphPropertyError):
-        C.closeness_centrality(g)  # 4 nodes > patched limit 3
+    def graph(num_nodes):
+        g = build(
+            df_from_edges(
+                spark, [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0)], weighted=True
+            ),
+            is_directed=False,
+        )
+        g.metadata["num_nodes"] = num_nodes  # the measured size the guard reads
+        return g
+
+    with pytest.raises(GraphPropertyError, match=f"{cap + 1} nodes > max {cap}"):
+        C.closeness_centrality(graph(cap + 1))
+    g = graph(4)
+    assert C.closeness_centrality(g).count() == 4
     out = C.closeness_centrality(g, g.node_ids().limit(2))
     assert out.count() == 2
 

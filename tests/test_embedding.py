@@ -11,6 +11,7 @@ import pytest
 
 from metagraph_spark.exceptions import GraphPropertyError
 from metagraph_spark.graph import build
+from metagraph_spark.operators import embedding as E
 from metagraph_spark.operators.embedding import hope_katz_train
 from tests.conftest import df_from_edges
 
@@ -97,17 +98,27 @@ def _numpy_hope(edges, n, d, beta, k_terms, power_iters, oversample, seed):
     return np.hstack([src, tgt]), sig
 
 
-@pytest.mark.parametrize("driver_cap", [None, 0])
-def test_hope_katz_matches_numpy_twin(spark, driver_cap):
-    # driver_cap None routes the small fixture to the round-6 driver
-    # kernel; 0 forces the distributed superstep path — both must match
-    # the same dense-algebra twin
+def _distributed(g, embedding_size, beta, k_terms, power_iters, oversample,
+                 seed):
+    """The distributed superstep path of hope_katz_train, run explicitly
+    (the small fixtures route to the driver kernel)."""
+    half = embedding_size // 2
+    return E._hope_distributed(g, half, half + oversample, beta, k_terms,
+                               power_iters, seed, bcast=True)
+
+
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_hope_katz_matches_numpy_twin(spark, route):
+    # the small fixture routes to the driver kernel; the distributed
+    # superstep path runs explicitly — both must match the same
+    # dense-algebra twin
     edges = _fixture_edges()
     n, d = 20, 8
     g = build(df_from_edges(spark, [(s, t, 1.0) for s, t in edges]), is_directed=True)
-    out = hope_katz_train(
+    train = hope_katz_train if route == "driver" else _distributed
+    out = train(
         g, embedding_size=d, beta=0.05, k_terms=5, power_iters=1, oversample=2,
-        seed=7, driver_max_edges=driver_cap,
+        seed=7,
     )
     got = {r["id"]: np.array(r["emb"]) for r in out.collect()}
     expected, _ = _numpy_hope(edges, n, d, 0.05, 5, 1, 2, 7)
@@ -175,7 +186,7 @@ def test_hope_katz_driver_matches_distributed(spark):
     drv = {r["id"]: np.array(r["emb"])
            for r in hope_katz_train(g, **kw).collect()}
     dst = {r["id"]: np.array(r["emb"])
-           for r in hope_katz_train(g, driver_max_edges=0, **kw).collect()}
+           for r in _distributed(g, **kw).collect()}
     assert set(drv) == set(dst)
     ids = sorted(drv)
     D = np.array([drv[i] for i in ids])

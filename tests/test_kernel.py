@@ -43,16 +43,19 @@ def test_kernel_matches_join_based(spark):
 
 @pytest.mark.slow
 def test_pagerank_auto_strategy_threshold(spark):
-    """strategy='auto' picks the kernel below the vertex threshold and the
-    join path above it; both sides of the switch produce golden values."""
+    """strategy='auto' picks the kernel for a graph within the kernel caps
+    (the rule itself is tested at its cap boundaries in test_routing);
+    both sides of the switch produce golden values."""
+    from metagraph_spark.routing import use_kernel
+
     g = build(df_from_edges(spark, GOLDEN_EDGES, weighted=False), is_directed=True)
+    assert use_kernel("auto", g)
     via_kernel = {r["id"]: r["rank"] for r in
                   pagerank(g, maxiter=50, tolerance=1e-7,
-                           strategy="auto", kernel_max_vertices=100).collect()}
-    # threshold below |V| -> join path
+                           strategy="auto").collect()}
     via_join = {r["id"]: r["rank"] for r in
                 pagerank(g, maxiter=50, tolerance=1e-7,
-                         strategy="auto", kernel_max_vertices=1).collect()}
+                         strategy="join").collect()}
     for node, expected in GOLDEN_EXPECTED.items():
         assert math.isclose(via_kernel[node], expected, rel_tol=1e-5)
         assert math.isclose(via_join[node], expected, rel_tol=1e-5)

@@ -17,6 +17,7 @@ from metagraph_spark.operators.kernel_algos import (
     lpa_kernel,
 )
 from metagraph_spark.operators.lpa import label_propagation_community
+from metagraph_spark.routing import use_kernel
 from tests.conftest import df_from_edges
 
 KATZ_GOLDEN_EDGES = [
@@ -104,19 +105,12 @@ def test_katz_kernel_spill_dir_converged_golden(spark, tmp_path):
 
 
 def test_katz_auto_strategy_threshold(spark):
+    """``"auto"`` takes the kernel within the kernel caps (the rule is
+    tested at its cap boundaries in test_routing); both routes are golden."""
     g = build(df_from_edges(spark, KATZ_GOLDEN_EDGES), is_directed=True)
-    via_kernel = _map(
-        katz_centrality(
-            g, tolerance=1e-7, strategy="auto", kernel_max_vertices=100
-        ),
-        "katz",
-    )
-    via_join = _map(
-        katz_centrality(
-            g, tolerance=1e-7, strategy="auto", kernel_max_vertices=1
-        ),
-        "katz",
-    )
+    assert use_kernel("auto", g)
+    via_kernel = _map(katz_centrality(g, tolerance=1e-7, strategy="auto"), "katz")
+    via_join = _map(katz_centrality(g, tolerance=1e-7, strategy="join"), "katz")
     for k, v in KATZ_GOLDEN.items():
         assert math.isclose(via_kernel[k], v, rel_tol=1e-5)
         assert math.isclose(via_join[k], v, rel_tol=1e-5)
@@ -155,10 +149,9 @@ def test_hits_kernel_matches_join(spark):
             assert math.isclose(jm[k], km[k], rel_tol=1e-6, abs_tol=1e-9), (
                 col, k,
             )
-    # strategy routing smoke: auto below cap = kernel result
-    vh, _va = hits_centrality(
-        g, tolerance=1e-7, strategy="auto", kernel_max_vertices=100
-    )
+    # strategy routing smoke: auto within the caps = kernel result
+    assert use_kernel("auto", g)
+    vh, _va = hits_centrality(g, tolerance=1e-7, strategy="auto")
     vm = _map(vh, "hubs")
     km = _map(kh, "hubs")
     for k in km:
@@ -196,14 +189,9 @@ def test_cc_kernel_fixed_rounds_pure_hashmin_parity(spark):
 def test_cc_strategy_routing(spark):
     edges = [(0, 1), (2, 3)]
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=False)
-    via_kernel = _map(
-        connected_components(g, strategy="auto", kernel_max_vertices=100),
-        "label",
-    )
-    via_join = _map(
-        connected_components(g, strategy="auto", kernel_max_vertices=1),
-        "label",
-    )
+    assert use_kernel("auto", g)
+    via_kernel = _map(connected_components(g, strategy="auto"), "label")
+    via_join = _map(connected_components(g, strategy="join"), "label")
     assert via_kernel == via_join == {0: 0, 1: 0, 2: 2, 3: 2}
     from metagraph_spark.state import CheckpointManager
 
@@ -356,17 +344,27 @@ def test_shared_label_blocks_feed_cc_and_lpa(spark, tmp_path):
 def test_lpa_strategy_routing(spark):
     edges = [(0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (3, 5)]
     g = build(df_from_edges(spark, edges, weighted=False), is_directed=False)
-    via_kernel = _map(
-        label_propagation_community(
-            g, strategy="auto", kernel_max_vertices=100
-        ),
-        "label",
-    )
-    via_join = _map(
-        label_propagation_community(g, strategy="auto", kernel_max_vertices=1),
-        "label",
-    )
+    assert use_kernel("auto", g)
+    via_kernel = _map(label_propagation_community(g, strategy="auto"), "label")
+    via_join = _map(label_propagation_community(g, strategy="join"), "label")
     assert via_kernel == via_join
+
+
+def test_lpa_shuffle_votes_match_broadcast(spark):
+    """The join route's two vote plans — broadcast label state (at most
+    ``routing.BROADCAST_MAX_VERTICES`` vertices) and the shuffle-vote plan
+    above it — give identical labels after 3 fixed rounds."""
+    from metagraph_spark.operators.lpa import _lpa_join
+
+    edges = _random_edges(60, 150, seed=21, weighted=False) + [(70, 70)]
+    nodes = spark.createDataFrame([(i,) for i in range(80)], "id long")
+    g = build(df_from_edges(spark, edges, weighted=False), nodes=nodes,
+              is_directed=False)
+    bcast = _map(_lpa_join(g, 50, 3, None, broadcast=True), "label")
+    shuffle = _map(_lpa_join(g, 50, 3, None, broadcast=False), "label")
+    assert len(bcast) == 80
+    assert bcast == shuffle
+    assert bcast == _map(lpa_kernel(g, fixed_rounds=3), "label")
 
 
 def test_label_loops_resume_from_committed_round(spark, tmp_path, monkeypatch):

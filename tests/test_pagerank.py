@@ -15,8 +15,8 @@ import math
 import numpy as np
 import pytest
 
-from metagraph_spark import ConvergenceError
-from metagraph_spark.graph import build
+from metagraph_spark import ConvergenceError, routing
+from metagraph_spark.graph import Graph, build
 from metagraph_spark.operators.pagerank import pagerank
 from tests.conftest import df_from_edges
 
@@ -139,9 +139,13 @@ def test_pagerank_kernel_spill_dir_route(spark, tmp_path):
     b = {r["id"]: r["rank"] for r in pagerank(g, fixed_iterations=5).collect()}
     for k in a:
         assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15)
-    # auto + spill dir must take the kernel even past a tiny vertex cap
+    # auto + spill dir takes the kernel, past the kernel caps too
+    huge = Graph(edges=None, metadata={
+        "num_nodes": routing.KERNEL_MAX_VERTICES + 1,
+        "num_edges": routing.KERNEL_AUTO_MAX_EDGES + 1})
+    assert routing.use_kernel("auto", huge, str(tmp_path / "kb2"))
     c = {r["id"]: r["rank"] for r in pagerank(
-        g, fixed_iterations=5, strategy="auto", kernel_max_vertices=1,
+        g, fixed_iterations=5, strategy="auto",
         kernel_spill_dir=str(tmp_path / "kb2")).collect()}
     assert c == a
 

@@ -8,8 +8,8 @@ import random
 import numpy as np
 import pytest
 
+from metagraph_spark import routing
 from metagraph_spark.graph import build
-from metagraph_spark.operators import kernel
 from metagraph_spark.operators import supersteps as S
 from metagraph_spark.operators.kernel import build_edge_blocks
 from metagraph_spark.operators.kernel_algos import (
@@ -78,25 +78,26 @@ def test_program_executor_parity(spark, tmp_path, name, executor):
 
 
 def test_executor_choice_at_cap_boundaries():
-    """The one routing rule, at cap-1 / cap / cap+1 of every cap."""
-    cap_e = kernel.KERNEL_DRIVER_LOOP_MAX_EDGES
-    cap_v = kernel.KERNEL_DRIVER_LOOP_MAX_VERTICES
-    min_v = kernel.KERNEL_DISTRIBUTED_MIN_VERTICES
+    """The one executor rule, at cap-1 / cap / cap+1 of every cap."""
+    choose = routing.choose_executor
+    cap_e = routing.DRIVER_MAX_EDGES
+    cap_v = routing.DRIVER_MAX_VERTICES
+    min_v = routing.SLICE_STORE_MIN_VERTICES
     for fb in (False, True):
-        assert S.choose_executor(cap_e - 1, 10, fb) == "driver"
-        assert S.choose_executor(cap_e, 10, fb) == "driver"
-        assert S.choose_executor(cap_e + 1, 10, fb) == "broadcast"
+        assert choose(cap_e - 1, 10, fb) == "driver"
+        assert choose(cap_e, 10, fb) == "driver"
+        assert choose(cap_e + 1, 10, fb) == "broadcast"
         above_v = "slice" if fb else "broadcast"
-        assert S.choose_executor(10, cap_v - 1, fb) == "driver"
-        assert S.choose_executor(10, cap_v, fb) == "driver"
-        assert S.choose_executor(10, cap_v + 1, fb) == above_v
+        assert choose(10, cap_v - 1, fb) == "driver"
+        assert choose(10, cap_v, fb) == "driver"
+        assert choose(10, cap_v + 1, fb) == above_v
     # past the edge cap, file-backed layouts switch at the vertex rule
-    assert S.choose_executor(cap_e + 1, min_v - 1, True) == "broadcast"
-    assert S.choose_executor(cap_e + 1, min_v, True) == "slice"
-    assert S.choose_executor(cap_e + 1, min_v + 1, True) == "slice"
-    assert S.choose_executor(cap_e + 1, min_v + 1, False) == "broadcast"
+    assert choose(cap_e + 1, min_v - 1, True) == "broadcast"
+    assert choose(cap_e + 1, min_v, True) == "slice"
+    assert choose(cap_e + 1, min_v + 1, True) == "slice"
+    assert choose(cap_e + 1, min_v + 1, False) == "broadcast"
     # an injected slice store always takes the slice-store executor
-    assert S.choose_executor(10, 10, True, slice_store=True) == "slice"
+    assert choose(10, 10, True, slice_store=True) == "slice"
 
 
 def test_driver_rows_count_after_symmetrization(spark):
@@ -105,13 +106,13 @@ def test_driver_rows_count_after_symmetrization(spark):
     e = [(0, 1), (1, 2), (2, 2)]
     und = build(df_from_edges(spark, e, weighted=False), is_directed=False)
     dirg = build(df_from_edges(spark, e, weighted=False), is_directed=True)
-    assert S.driver_edge_rows(und, "sym") == 6
-    assert S.driver_edge_rows(dirg, "sym") == 3
-    assert S.driver_edge_rows(dirg, "reverse") == 3
+    assert routing.driver_edge_rows(und, "sym") == 6
+    for mode in ("raw", "sym", "reverse", "canonical"):
+        assert routing.driver_edge_rows(dirg, mode) == 3
     for mode in ("raw_sym", "canonical_sym"):
-        assert S.driver_edge_rows(dirg, mode) == 6
+        assert routing.driver_edge_rows(dirg, mode) == 6
     # what the collect actually holds never exceeds the counted rows
     for g in (und, dirg):
         for mode in ("sym", "raw_sym", "canonical_sym"):
             arrays = S._driver_graph_arrays(g, mode)
-            assert len(arrays.srcs) <= S.driver_edge_rows(g, mode)
+            assert len(arrays.srcs) <= routing.driver_edge_rows(g, mode)

@@ -75,9 +75,8 @@ def main():
     capture(lambda: lpa_new.label_propagation_community(
         g_unw, fixed_rounds=1, strategy="join").count(),
         "big_lpa_3r_after.txt")
-    capture(lambda: lpa_new.label_propagation_community(
-        g_unw, fixed_rounds=1, strategy="join",
-        broadcast_max_vertices=0).count(),
+    capture(lambda: lpa_new._lpa_join(
+        g_unw, 50, 1, None, broadcast=False).count(),
         "big_lpa_3r_after_shuffle_variant.txt")
 
     # --- two-phase CC round plan (bench big_cc)
